@@ -785,7 +785,7 @@ class Frame:
         percentile scaling (rank / row count, pandas semantics).  Runs
         as the fully distributed tie-aware ranking in
         operators/ranking.py — distinct values carry tie counts
-        through a range-partitioned prefix sum; the data itself never
+        through a prefix sum over sampled range bounds; the data itself never
         funnels through one partition (the plan a bare RANK() OVER
         (ORDER BY ...) would produce).  ``method='first'`` requires an
         explicit ``tiebreak`` column: pandas breaks ties by physical

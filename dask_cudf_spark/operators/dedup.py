@@ -539,6 +539,10 @@ def connected_components(
     star-shaped components (the common near-dup case) converge at
     initialization and pure-pair graphs need a single loop iteration to
     detect stability.
+
+    Edges with a null endpoint are dropped: a null names no node, and
+    in the union-find a null node would read as its overflow sentinel
+    and silently send the call down the distributed path.
     """
     # node ids are type-generic (long doc ids, string urls, ...): both
     # paths carry the source dtype through — cast dst to src's type so
@@ -546,7 +550,7 @@ def connected_components(
     node_type = edges.schema[src].dataType
     e = edges.select(
         F.col(src).alias("n"), F.col(dst).cast(node_type).alias("m")
-    )
+    ).dropna()
 
     # round-4 leak fix, generalized: unpersist the PREVIOUS call's
     # caches so a long session holds one call's worth, never one per

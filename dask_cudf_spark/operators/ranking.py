@@ -1,41 +1,36 @@
-"""Distributed exact global ranking (round 7).
+"""Distributed exact global ranking.
 
 ``ROW_NUMBER() OVER (ORDER BY ...)`` with no PARTITION BY compiles to
 ``Exchange SinglePartition`` + ``WindowExec`` — every row funnels
-through ONE task, the canonical 100-TB non-starter (WindowExec itself
-warns).  Most of this repo's global windows rank provably bounded
-tables (top-k results, day/bucket rollups, distinct codes) where the
-single partition is a few hundred rows; but ranks over USER- or
-ROW-scaled tables (RFM quintiles, qcut, corpus-wide scores) need the
-classic two-phase distributed ranking instead:
+through ONE task, the canonical 100-TB non-starter.  Ranks over
+provably bounded tables (top-k results, rollups) can afford that;
+ranks over USER- or ROW-scaled tables (RFM quintiles, qcut,
+corpus-wide scores) run here instead, the way dask-cudf ranks from a
+frame's known ``divisions`` (``_range_offsets``):
 
-1. ``repartitionByRange`` on the total-order keys — the same
-   distributed sort a global ``ORDER BY`` uses (range exchange, fully
-   parallel).
-2. Per-partition row counts -> exclusive prefix sums.  The counts
-   table has at most ``spark.sql.shuffle.partitions`` rows (cluster
-   width, NOT data size), so its own cumulative window is bounded by
-   construction.
-3. Partition-local ``row_number`` (window keyed on the materialized
-   ``spark_partition_id``) + the broadcast prefix offset = the exact
-   global rank.
+1. With P = ``spark.sql.shuffle.partitions`` > 1, one small job samples
+   the order keys (P x ``rangeExchange.sampleSizePerPartition`` rows,
+   as Spark's own range exchange does), Spark sorts the sample in the
+   caller's order, and P-1 evenly spaced rows become the bounds.
+   P = 1 needs no bounds and no job.
+2. ``__pid`` = the number of bounds a row sorts strictly after: a pure,
+   order-monotone expression over the bounds as literal arrays (a
+   binary search in log P steps).  Every consumer computes the same
+   ``__pid``, so no evaluation is pinned and the plan keeps its lineage.
+3. Per-``__pid`` rollups (<= P rows) give exclusive prefix offsets,
+   broadcast back; a window partitioned by ``__pid`` plus the offset is
+   the exact global value.
 
-Two full-data exchanges total (range + hash-on-pid) versus the
-single-partition funnel; everything stays JVM-side and whole-stage
-codegen'd — no Python boundary.  Determinism: callers must pass a
-TOTAL order (include tiebreaker keys), the same contract the
-single-partition form already required for reproducible output.
-
-Upstream parity: cudf ranks within one GPU's memory
-(cudf::sorted_order); dask-cudf's distributed sort + cumulative-count
-recombination is exactly the shape implemented here, re-expressed as
-Catalyst-visible DataFrame ops.
+The ranked rows cross one wide shuffle (the window's ``__pid`` hash
+exchange); the rollup shuffles only partial aggregates.  Callers must
+pass a TOTAL order (include tiebreaker keys) for deterministic output.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
+from pyspark.sql.types import TimestampType
 
 __all__ = [
     "global_row_number",
@@ -45,44 +40,138 @@ __all__ = [
 ]
 
 
-def _ranged_parts(
-    df: DataFrame, order_cols: list[Column]
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """(ranged, counts, offsets): the range-exchanged frame with its
-    materialized partition id, the per-partition row counts (<=
-    shuffle.partitions rows), and their exclusive prefix sums."""
-    # localCheckpoint PINS one evaluation of the range exchange (r16,
-    # r15 ADVICE): `ranged` feeds two independent subtrees (the counts/
-    # offsets rollup and the final join), and RangePartitioner bounds
-    # are SAMPLED — if exchange reuse does not fire, the two
-    # evaluations can draw different range splits and mismatch __pid
-    # between offsets and rows, silently corrupting every downstream
-    # rank.  eager=False (the r15 pattern): no extra job, materialized
-    # by the query's own first action, and NOT CacheManager-registered
-    # so bench samples cannot reuse it across runs.
-    ranged = (
-        df.repartitionByRange(*order_cols)
-        .withColumn("__pid", F.spark_partition_id())
-        .localCheckpoint(eager=False)
-    )
-    counts = ranged.groupBy("__pid").agg(F.count("*").alias("__n"))
-    # exclusive prefix sum over <= shuffle.partitions rows: the one
-    # remaining global window, bounded by CLUSTER WIDTH not data size
-    w_off = Window.orderBy("__pid").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    offsets = counts.select(
-        "__pid",
-        F.coalesce(F.sum("__n").over(w_off), F.lit(0)).alias("__off"),
-    )
-    return ranged, counts, offsets
+def _sort_keys(df: DataFrame, order_cols: list[Column]) -> list[tuple]:
+    """(key, descending, nulls_last) per sort Column, read from its sort
+    node; a bare Column sorts ascending, nulls first, as in Spark."""
+    jvm_column = df.sparkSession._jvm.org.apache.spark.sql.Column
+    keys = []
+    for c in order_cols:
+        node = c._jc.node()
+        if node.getClass().getSimpleName() != "SortOrder":
+            keys.append((c, False, False))
+            continue
+        desc = "Descending" in str(node.sortDirection())
+        nulls_last = "NullsLast" in str(node.nullOrdering())
+        keys.append((Column(jvm_column(node.child())), desc, nulls_last))
+    return keys
 
 
-def _ranked_with_offsets(
-    df: DataFrame, order_cols: list[Column]
-) -> tuple[DataFrame, list[Column]]:
-    ranged, _counts, offsets = _ranged_parts(df, order_cols)
-    return ranged.join(F.broadcast(offsets), "__pid"), order_cols
+def _bounds(
+    df: DataFrame, order_cols: list[Column], keys: list, parts: int
+) -> list[Column]:
+    """One literal array per order key holding the P-1 bounds: evenly
+    spaced rows of a random sample of the keys, sorted by Spark in the
+    caller's order (empty for an empty sample).  Timestamps travel as
+    epoch microseconds: a Python datetime would round-trip through the
+    driver's local zone."""
+    conf = "spark.sql.execution.rangeExchange.sampleSizePerPartition"
+    size = parts * int(df.sparkSession.conf.get(conf))
+    sample = (
+        df.orderBy(F.rand(0))
+        .limit(size)
+        .orderBy(*order_cols)
+        .select(*[k for k, _, _ in keys])
+    )
+    types = [f.dataType for f in sample.schema.fields]
+    ts = [isinstance(t, TimestampType) for t in types]
+    picks = [sample[i] for i in range(len(ts))]
+    rows = sample.select(
+        *[F.unix_micros(c) if is_ts else c for c, is_ts in zip(picks, ts)]
+    ).collect()
+    if not rows:
+        return []
+    picked = [rows[i * len(rows) // parts] for i in range(1, parts)]
+
+    def lit(v, i: int) -> Column:
+        if ts[i]:
+            return F.timestamp_micros(F.lit(v))
+        return F.lit(v).cast(types[i])
+
+    return [F.array(*[lit(r[i], i) for r in picked]) for i in range(len(ts))]
+
+
+def _after(keys: list, bound: list[Column]) -> Column:
+    """The row sorts strictly after ``bound``, lexicographically, each
+    key in its own direction and null order.  Spark's ``>`` and ``<=>``
+    put NaN above every number and equal to itself, as its sort does."""
+    expr = None
+    for (k, desc, nulls_last), b in reversed(list(zip(keys, bound))):
+        cmp = k < b if desc else k > b
+        if nulls_last:  # a null bound is after every row
+            gt = b.isNotNull() & (k.isNull() | cmp)
+        else:  # a null bound is before every non-null key
+            gt = F.coalesce(cmp, b.isNull() & k.isNotNull())
+        eq = k.eqNullSafe(b)
+        expr = gt if expr is None else gt | (eq & expr)
+    return expr
+
+
+def _with_pid(
+    df: DataFrame, keys: list, arrays: list[Column], n_bounds: int
+) -> DataFrame:
+    """``df`` plus ``__pid``, the number of bounds the row sorts strictly
+    after, by binary lifting: step s adds s when the row sorts after
+    bound ``__pid + s``.  Each step is one small projection, so the plan
+    grows with log P; a CASE tree over every bound outgrows whole-stage
+    codegen near P = 128."""
+    names = [f"__b{i}" for i in range(len(arrays))]
+    out = df.withColumns(dict(zip(names, arrays), __pid=F.lit(0)))
+    step = (1 << n_bounds.bit_length()) >> 1
+    while step:
+        idx = F.col("__pid") + step
+        after = _after(keys, [F.element_at(b, idx) for b in names])
+        # the outer CASE keeps element_at in range (ANSI raises past it)
+        hit = F.when(idx <= n_bounds, F.when(after, step).otherwise(0))
+        out = out.withColumn("__pid", F.col("__pid") + hit.otherwise(0))
+        step >>= 1
+    return out.drop(*names)
+
+
+def _range_offsets(
+    df: DataFrame, order_cols: list[Column], aggs: dict[str, Column]
+) -> tuple[DataFrame, WindowSpec]:
+    """(joined, w): ``joined`` is ``df`` + ``__pid`` + for each of
+    ``aggs`` (name -> aggregate) its exclusive prefix over the lower
+    ``__pid``s under ``name`` and its grand total under ``name_all``;
+    ``w`` is the window partitioned by ``__pid`` in ``order_cols``
+    order."""
+    keys = _sort_keys(df, order_cols)
+    parts = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    arrays = _bounds(df, order_cols, keys, parts) if parts > 1 else []
+    ranged = _with_pid(df, keys, arrays, parts - 1 if arrays else 0)
+    per = ranged.groupBy("__pid").agg(*[c.alias(n) for n, c in aggs.items()])
+    # exclusive prefix sums over <= P rows: the one global window left
+    w_off = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
+    prefix = [
+        F.coalesce(F.sum(n).over(w_off), F.lit(0)).alias(n) for n in aggs
+    ]
+    # the offsets reach the rows as ONE broadcast row holding a __pid map,
+    # not through an equi-join on __pid: join-key lineage analysis
+    # (dynamic pruning, runtime filters) expands the lifting steps
+    # exponentially
+    offsets = per.select(
+        F.struct("__pid", F.struct(*prefix)).alias("e"), *aggs
+    ).agg(
+        F.map_from_entries(F.collect_list("e")).alias("__offs"),
+        *[F.sum(n).alias(f"{n}_all") for n in aggs],
+    )
+    off = F.element_at("__offs", F.col("__pid"))
+    joined = (
+        ranged.crossJoin(F.broadcast(offsets))
+        .withColumns({n: off[n] for n in aggs})
+        .drop("__offs")
+    )
+    return joined, Window.partitionBy("__pid").orderBy(*order_cols)
+
+
+def _row_numbers(
+    df: DataFrame, order_cols: list[Column], out: str
+) -> DataFrame:
+    """``df`` plus its global row number in ``out`` and its row count in
+    ``__n_all``."""
+    joined, w = _range_offsets(df, order_cols, {"__n": F.count("*")})
+    rank = (F.row_number().over(w) + F.col("__n")).cast("long")
+    return joined.withColumn(out, rank).drop("__pid", "__n")
 
 
 def global_row_number(
@@ -91,15 +180,7 @@ def global_row_number(
     """Exact ``ROW_NUMBER() OVER (ORDER BY order_cols)`` as a fully
     distributed plan (no Exchange SinglePartition).  ``order_cols``
     must be a total order for deterministic output."""
-    joined, order_cols = _ranked_with_offsets(df, order_cols)
-    w_local = Window.partitionBy("__pid").orderBy(*order_cols)
-    return (
-        joined.withColumn(
-            out,
-            (F.row_number().over(w_local) + F.col("__off")).cast("long"),
-        )
-        .drop("__pid", "__off")
-    )
+    return _row_numbers(df, order_cols, out).drop("__n_all")
 
 
 def global_ntile(
@@ -110,37 +191,15 @@ def global_ntile(
     rank and total count N: with q = N div n, r = N mod n, the first
     r tiles hold q+1 rows and the rest hold q — bit-identical to
     Spark's and DuckDB's NTILE, verified by the oracle hash gate."""
-    ranged, counts, offsets = _ranged_parts(df, order_cols)
-    w_local = Window.partitionBy("__pid").orderBy(*order_cols)
-    ranked = (
-        ranged.join(F.broadcast(offsets), "__pid")
-        .withColumn(
-            "__rk",
-            (F.row_number().over(w_local) + F.col("__off")).cast("long"),
-        )
-        .drop("__off")
-    ).drop("__pid")
-    # N from the bounded per-partition counts table (r15, guide §1.2):
-    # the old ranked.groupBy().count() re-ran the whole range exchange
-    # + offsets join a second time just to count rows.  coalesce to 0
-    # on EMPTY input (sum over zero rows is NULL where count(*) was 0)
-    # so the tile arithmetic never computes over NULL — harmless today
-    # (ranked is also empty) but a latent ANSI hazard (r15 ADVICE).
-    total = counts.agg(
-        F.coalesce(F.sum("__n"), F.lit(0)).cast("long").alias("__N")
-    )
-    q = F.expr(f"__N div {n}")  # base tile size
-    r = F.col("__N") % n  # this many leading tiles hold q+1 rows
+    ranked = _row_numbers(df, order_cols, "__rk")
+    q = F.expr(f"__n_all div {n}")  # base tile size
+    r = F.col("__n_all") % n  # this many leading tiles hold q+1 rows
     big = r * (q + 1)  # rows covered by the larger tiles
     tile = F.when(
         F.col("__rk") <= big,
         F.ceil(F.col("__rk") / (q + 1)),
     ).otherwise(r + F.ceil((F.col("__rk") - big) / F.greatest(q, F.lit(1))))
-    return (
-        ranked.crossJoin(F.broadcast(total))
-        .withColumn(out, tile.cast("int"))
-        .drop("__rk", "__N")
-    )
+    return ranked.withColumn(out, tile.cast("int")).drop("__rk", "__n_all")
 
 
 def global_cumsum(
@@ -150,36 +209,12 @@ def global_cumsum(
     out: str = "cumsum",
 ) -> DataFrame:
     """Exact global running sum of ``sum_col`` in ``order_cols`` order,
-    distributed the same two-phase way: per-partition sums -> bounded
+    distributed the same two-phase way: per-``__pid`` sums -> bounded
     prefix offsets -> partition-local cumulative window + offset."""
-    # pinned evaluation — same __pid-consistency hazard as
-    # _ranged_parts (two consumers of one sampled range exchange)
-    ranged = (
-        df.repartitionByRange(*order_cols)
-        .withColumn("__pid", F.spark_partition_id())
-        .localCheckpoint(eager=False)
-    )
-    psums = ranged.groupBy("__pid").agg(F.sum(sum_col).alias("__s"))
-    w_off = Window.orderBy("__pid").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    offsets = psums.select(
-        "__pid",
-        F.coalesce(F.sum("__s").over(w_off), F.lit(0)).alias("__off"),
-    )
-    w_local = (
-        Window.partitionBy("__pid")
-        .orderBy(*order_cols)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    return (
-        ranged.join(F.broadcast(offsets), "__pid")
-        .withColumn(
-            out,
-            (F.sum(sum_col).over(w_local) + F.col("__off")).cast("long"),
-        )
-        .drop("__pid", "__off")
-    )
+    joined, w = _range_offsets(df, order_cols, {"__s": F.sum(sum_col)})
+    w_cum = w.rowsBetween(Window.unboundedPreceding, 0)
+    cum = (F.sum(sum_col).over(w_cum) + F.col("__s")).cast("long")
+    return joined.withColumn(out, cum).drop("__pid", "__s", "__s_all")
 
 
 def global_rank_methods(
@@ -210,42 +245,23 @@ def global_rank_methods(
     distinct table is what shuffles (bounded by value cardinality —
     which for continuous columns approaches data size, so the dense
     row-number and the tie-count running sum are FUSED into a single
-    ranged pass: one range exchange, one pid exchange, both prefix
-    offsets from the same bounded per-partition rollup); the full
-    data moves only through the final equi-join."""
+    ranged pass: one ``__pid`` exchange, both prefix offsets from the
+    same bounded per-``__pid`` rollup); the full data moves only
+    through the final equi-join."""
     order = [F.asc(value_col) if ascending else F.desc(value_col)]
     g = (
         df.filter(F.col(value_col).isNotNull())
         .groupBy(value_col)
         .agg(F.count("*").alias("__ties"))
     )
-    # pinned evaluation — same __pid-consistency hazard as
-    # _ranged_parts (two consumers of one sampled range exchange)
-    ranged = (
-        g.repartitionByRange(*order)
-        .withColumn("__pid", F.spark_partition_id())
-        .localCheckpoint(eager=False)
-    )
-    per = ranged.groupBy("__pid").agg(
-        F.count("*").alias("__n"), F.sum("__ties").alias("__s")
-    )
-    w_off = Window.orderBy("__pid").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    offsets = per.select(
-        "__pid",
-        F.coalesce(F.sum("__n").over(w_off), F.lit(0)).alias("__offn"),
-        F.coalesce(F.sum("__s").over(w_off), F.lit(0)).alias("__offs"),
-    )
-    w_rn = Window.partitionBy("__pid").orderBy(*order)
-    w_cum = w_rn.rowsBetween(Window.unboundedPreceding, 0)
-    g2 = ranged.join(F.broadcast(offsets), "__pid").select(
+    aggs = {"__n": F.count("*"), "__s": F.sum("__ties")}
+    joined, w = _range_offsets(g, order, aggs)
+    w_cum = w.rowsBetween(Window.unboundedPreceding, 0)
+    g2 = joined.select(
         value_col,
         "__ties",
-        (F.row_number().over(w_rn) + F.col("__offn"))
-        .cast("long")
-        .alias("__dense"),
-        (F.sum("__ties").over(w_cum) + F.col("__offs"))
+        (F.row_number().over(w) + F.col("__n")).cast("long").alias("__dense"),
+        (F.sum("__ties").over(w_cum) + F.col("__s"))
         .cast("long")
         .alias("__cmax"),
     )

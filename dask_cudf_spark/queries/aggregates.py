@@ -1937,8 +1937,8 @@ def q_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly.
 
     Scale: one user_id rollup shuffle; the three quintiles each run as
-    the DISTRIBUTED exact ntile (operators/ranking.py: range exchange
-    + bounded prefix offsets + partition-local window — round 7; the
+    the DISTRIBUTED exact ntile (operators/ranking.py: sampled range
+    bounds + bounded prefix offsets + partition-local window; the
     single-partition NTILE funnel this replaced cannot hold a
     100-TB-scale user table), recombined by user_id equi-joins; the
     code rollup is <= 125 rows."""
@@ -3883,13 +3883,15 @@ def q_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: ONE |distinct lengths|-row shuffle with map-side partial
     counts; the cumulative ECDF sums run DISTRIBUTED over that
-    distinct-value table (operators/ranking.py two-phase pattern —
-    range exchange + per-partition prefix offsets, fused for both
-    halves' counts, because distinct lengths of a web corpus approach
-    data scale), the two totals broadcast back as a 1-row literal, and
-    the argmax is a TakeOrderedAndProject limit(1), never a
-    single-partition ranked window."""
+    distinct-value table (operators/ranking.py ``_range_offsets`` —
+    sampled range bounds + per-``__pid`` prefix offsets, fused for
+    both halves' counts, because distinct lengths of a web corpus
+    approach data scale), the two totals broadcast back as a 1-row
+    literal, and the argmax is a TakeOrderedAndProject limit(1), never
+    a single-partition ranked window."""
     from pyspark.sql.window import Window
+
+    from ..operators.ranking import _range_offsets
 
     d = load_table(spark, sf_dir, "documents").filter(
         F.col("n_chars").isNotNull()
@@ -3902,60 +3904,20 @@ def q_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("c_o"),
     )
-    # two-phase distributed cumulative sums (both halves in ONE ranged
-    # pass): per-partition rollups -> bounded prefix-offset window
-    # (<= shuffle.partitions rows, cluster width not data size) ->
-    # partition-local cumulative windows + broadcast offsets
-    # localCheckpoint PINS one evaluation of the sampled range exchange
-    # (r16, r15 ADVICE): `ranged` feeds both the per/offsets rollup and
-    # the cum join; two evaluations could draw different range bounds
-    # and mismatch __pid between offsets and rows, corrupting the ECDF
-    # cumulative sums.  eager=False — no extra job, not
-    # CacheManager-registered (no cross-run reuse).
-    ranged = (
-        pts.repartitionByRange("x")
-        .withColumn("__pid", F.spark_partition_id())
-        .localCheckpoint(eager=False)
+    # both halves' cumulative sums in ONE ranged pass; the totals come
+    # from the bounded per-__pid rollup, not a second documents scan
+    joined, w = _range_offsets(
+        pts, [F.asc("x")], {"__se": F.sum("c_e"), "__so": F.sum("c_o")}
     )
-    per = ranged.groupBy("__pid").agg(
-        F.sum("c_e").alias("__se"), F.sum("c_o").alias("__so")
-    )
-    w_off = Window.orderBy("__pid").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    offsets = per.select(
-        "__pid",
-        F.coalesce(F.sum("__se").over(w_off), F.lit(0)).alias("__offe"),
-        F.coalesce(F.sum("__so").over(w_off), F.lit(0)).alias("__offo"),
-    )
-    w_local = (
-        Window.partitionBy("__pid")
-        .orderBy("x")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    cum = ranged.join(F.broadcast(offsets), "__pid").select(
+    w_cum = w.rowsBetween(Window.unboundedPreceding, 0)
+    gaps = joined.select(
         "x",
-        (F.sum("c_e").over(w_local) + F.col("__offe"))
-        .cast("long")
-        .alias("cum_e"),
-        (F.sum("c_o").over(w_local) + F.col("__offo"))
-        .cast("long")
-        .alias("cum_o"),
-    )
-    # totals from the BOUNDED per-partition rollup (r16, guide §1.2 —
-    # the r15 global_ntile lesson): the old pts.agg() re-ran the full
-    # documents scan + groupBy a second time just to sum two columns;
-    # sum(__se) over per is the identical exact BIGINT total.
-    tot = per.agg(
-        F.sum("__se").cast("long").alias("n_e"),
-        F.sum("__so").cast("long").alias("n_o"),
-    )
-    gaps = cum.crossJoin(F.broadcast(tot)).select(
-        "x",
-        F.abs(F.col("cum_e") * F.col("n_o") - F.col("cum_o") * F.col("n_e"))
-        .alias("d_num"),
-        "n_e",
-        "n_o",
+        F.abs(
+            (F.sum("c_e").over(w_cum) + F.col("__se")) * F.col("__so_all")
+            - (F.sum("c_o").over(w_cum) + F.col("__so")) * F.col("__se_all")
+        ).alias("d_num"),
+        F.col("__se_all").alias("n_e"),
+        F.col("__so_all").alias("n_o"),
     )
     # argmax via the distributed TakeOrderedAndProject (the
     # q_pagerank_items limit-then-rank lesson): (d_num desc, x asc) is

@@ -13,6 +13,7 @@ from ..sources import load_table
 
 _EN_STOP_SQL = "['the', 'a', 'of', 'and', 'to', 'in', 'is', 'for', 'on', 'with']"
 
+
 @register(
     "q_text_stats",
     family="text",
@@ -1829,7 +1830,7 @@ def q_qcut(spark: SparkSession, sf_dir: str) -> DataFrame:
     tiebreak keys rather than pandas' value-edge rule — documented
     divergence; the equal-count property (the reason qcut exists) is
     exact.  Scale (round 7): runs as the DISTRIBUTED exact ntile
-    (operators/ranking.py — range exchange + bounded prefix offsets +
+    (operators/ranking.py — sampled range bounds + bounded prefix offsets +
     partition-local window) over the FULL fact table; the previous
     single-partition NTILE funnel could never hold lineitem at
     100 TB, and the approx-edges fallback the old note suggested is

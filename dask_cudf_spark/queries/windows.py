@@ -1688,7 +1688,7 @@ def q_rank_global(spark: SparkSession, sf_dir: str) -> DataFrame:
     through Exchange SinglePartition.  Runs instead as the
     distributed tie-aware ranking (operators/ranking.py
     global_rank_methods): distinct values carry tie counts through a
-    range-partitioned prefix sum; the fact rows move only through the
+    prefix sum over sampled range bounds; the fact rows move only through the
     final equi-join.  All four methods derived exactly (avg's .5
     fractions are representable doubles), replayed bit-for-bit by the
     oracle's RANK/DENSE_RANK/tie-count forms."""

@@ -336,6 +336,13 @@ def _live_dirs(entries: list[dict], version: int | None) -> list[str]:
     return live
 
 
+def _require_staged(spark: SparkSession, path: str, staged_dir: str) -> None:
+    """A log record naming a missing dir would break every snapshot."""
+    _, fs, hpath = _jfs(spark, f"{path.rstrip('/')}/{staged_dir}")
+    if not fs.exists(hpath):
+        raise FileNotFoundError(f"staged dir {staged_dir!r} not in {path}")
+
+
 def stage_commit_data(df: DataFrame, path: str) -> str:
     """Write ``df``'s data dir for a FUTURE commit/merge and return the
     dir name (``data/<uuid>``) — the write half of ``commit`` split out
@@ -406,9 +413,11 @@ def commit(
     ``staged_dir`` links a dir pre-written by ``stage_commit_data``
     (possibly from another driver thread, overlapping earlier jobs)
     instead of writing ``df`` here; ``df`` then only supplies the
-    session.  With ``batch_id`` dedup the staged dir of a skipped
-    replay is left unreferenced (vacuum reclaims it) — the same
-    orphan an aborted commit leaves."""
+    session.  A ``staged_dir`` that does not exist under ``path``
+    raises FileNotFoundError before any log record is written.  With
+    ``batch_id`` dedup the staged dir of a skipped replay is left
+    unreferenced (vacuum reclaims it) — the same orphan an aborted
+    commit leaves."""
     if op not in ("append", "overwrite"):
         raise ValueError(f"op must be append|overwrite, got {op!r}")
     spark = df.sparkSession
@@ -417,6 +426,7 @@ def commit(
             if e.get("batch_id") == batch_id:
                 return e["version"]
     if staged_dir is not None:
+        _require_staged(spark, path, staged_dir)
         data_dir = staged_dir
     else:
         cid = uuid.uuid4().hex
@@ -736,6 +746,7 @@ def merge_by_key(
     # r15 evaluate-once/consistency property verbatim.
     cid = uuid.uuid4().hex
     if staged_dir is not None:
+        _require_staged(spark, path, staged_dir)
         upd_dir = staged_dir
     else:
         upd_dir = f"data/{cid}-upd"

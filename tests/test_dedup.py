@@ -60,6 +60,32 @@ def test_cc_overflow_sentinel_falls_back_exact(spark):
     assert None not in via_overflow
 
 
+def test_cc_null_endpoint_edges_dropped(spark, monkeypatch):
+    """An edge with a null endpoint names no node and is dropped: the
+    union-find neither fails on it nor emits a null node (which reads
+    as the overflow sentinel), so the call stays on the union-find
+    path and returns the components of the clean edges."""
+    from dask_cudf_spark.operators import dedup
+
+    def no_fallback(*args, **kwargs):
+        raise AssertionError("fell back to label propagation")
+
+    monkeypatch.setattr(dedup, "_cc_label_propagation", no_fallback)
+    clean = [(1, 2), (3, 2), (7, 8)]
+    schema = "id_a long, id_b long"
+    got = _comp_map(
+        connected_components(
+            spark.createDataFrame(
+                clean + [(None, 9), (4, None), (None, None)], schema
+            )
+        )
+    )
+    assert got == _comp_map(
+        connected_components(spark.createDataFrame(clean, schema))
+    )
+    assert got == {1: 1, 2: 1, 3: 1, 7: 7, 8: 7}
+
+
 def test_cc_label_propagation_multi_component_parity(spark):
     """Both paths agree on a mixed graph: two chains + a star + an
     isolated pair, with edges listed in arbitrary direction."""

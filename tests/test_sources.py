@@ -483,6 +483,52 @@ def test_txlog_staged_commit_and_merge(spark, tmp_path):
     assert read_snapshot(spark, path, version=0).count() == 2
 
 
+def test_txlog_staged_dir_must_exist(spark, tmp_path):
+    """commit/merge_by_key refuse a staged_dir that is not under the
+    table path, before any log record could reference it."""
+    from dask_cudf_spark.sources.txlog import (
+        _read_log,
+        commit,
+        merge_by_key,
+    )
+
+    path = str(tmp_path / "txmissing")
+    df = spark.createDataFrame([(1, "a")], "k long, v string")
+    commit(df, path, "append")
+    with pytest.raises(FileNotFoundError, match="staged dir"):
+        commit(df, path, "append", staged_dir="data/missing")
+    with pytest.raises(FileNotFoundError, match="staged dir"):
+        merge_by_key(df, path, "k", staged_dir="data/missing")
+    assert [e["version"] for e in _read_log(spark, path)] == [0]
+
+
+def test_txlog_vacuum_reclaims_deduped_staged_dir(spark, tmp_path):
+    """A batch_id replay that dedups to the earlier commit leaves its
+    staged dir unreferenced; vacuum reclaims it like an aborted
+    commit's dir and the table is unchanged."""
+    import os
+
+    from dask_cudf_spark.sources.txlog import (
+        _read_log,
+        commit,
+        read_snapshot,
+        stage_commit_data,
+        vacuum,
+    )
+
+    path = str(tmp_path / "txreplay")
+    df = spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string")
+    assert commit(df, path, "append", batch_id=7) == 0
+    staged = stage_commit_data(df, path)
+    assert commit(df, path, "append", staged_dir=staged, batch_id=7) == 0
+    assert all(staged not in e["dirs"] for e in _read_log(spark, path))
+    assert vacuum(spark, path, min_age_seconds=0) == 1
+    assert not os.path.exists(f"{path}/{staged}")
+    assert sorted(
+        (r["k"], r["v"]) for r in read_snapshot(spark, path).collect()
+    ) == [(1, "a"), (2, "b")]
+
+
 def test_txlog_optimize_and_vacuum(spark, tmp_path):
     """OPTIMIZE collapses the live set into one dir with identical
     contents; VACUUM removes dirs unreachable from the kept horizon
