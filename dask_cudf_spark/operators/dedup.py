@@ -520,7 +520,7 @@ def connected_components(
       attempt task stops reading at the cap, and loose-threshold
       corpora that trip it do so deterministically (same measured
       count), never flapping.  Interleaved same-session A/B
-      (scripts/ab_minhash_r16.py): probe-job shape 2.05 s min vs
+      (bench_local_r16/ab_minhash.txt): probe-job shape 2.05 s min vs
       one-job shape 1.23-1.3 s at sf0.1.
     - **Large graphs**: the distributed loop.  Each iteration: every
       node takes min(own label, neighbors' labels) — one shuffle join +

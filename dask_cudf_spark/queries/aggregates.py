@@ -4093,7 +4093,7 @@ def q_txlog_auto_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     writers stay safe."""
     import tempfile
 
-    from ..sources.txlog import _live_dirs, _read_log, commit, read_snapshot
+    from ..sources.txlog import commit, read_snapshot, snapshot_dirs
 
     od = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
@@ -4109,7 +4109,7 @@ def q_txlog_auto_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
             "append",
             auto_optimize_every=5,
         )
-    live = _live_dirs(_read_log(spark, path), None)
+    live = snapshot_dirs(spark, path)
     if len(live) > 5:
         raise RuntimeError(
             f"auto_optimize_every=5 failed to cap live dirs: {len(live)}"

@@ -3805,7 +3805,7 @@ def q_ppjoin_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (Generate is pipelined).  Exact same pair set: ids sorted
     # ascending => id_a < id_b by construction.  Measured vs the r15
     # explosion AND a threshold-branched guard variant (same-session
-    # interleaved min-of-4, scripts/ab_ppjoin_r16.py): two-level 1.025x
+    # interleaved min-of-4, bench_local_r16/ab_ppjoin.txt): two-level 1.025x
     # the explosion's time vs the guard's 1.19-1.20x — bounded memory
     # at ~2.5% cost, no branch, no extra checkpoint.
     cand = (

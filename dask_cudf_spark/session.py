@@ -71,7 +71,7 @@ def get_spark(
     # Shuffle codec is scale-dependent, so it is an env knob rather
     # than a hard default (r16, guide §2.3): at local bench volumes
     # (<= ~100 MB shuffles) lz4 vs zstd measured within noise
-    # (scripts/ab_zstd_r16.py: mins 3.27 vs 3.19 s at a 6M-row
+    # (bench_local_r16/ab_zstd.txt: mins 3.27 vs 3.19 s at a 6M-row
     # change_feed, host-steal bound), so the Spark default stays; on a
     # network-bound cluster where shuffle bytes dominate, set
     # SPARK_GRAFT_IO_CODEC=zstd for the better ratio at a little CPU.

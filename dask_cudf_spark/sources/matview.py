@@ -61,7 +61,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .txlog import _read_log, change_feed, commit, read_snapshot
+from .txlog import _read_dirs, _read_log, change_feed, commit, read_snapshot
 
 #: agg spec: out_col -> (fn, src_col); fn in _DECOMPOSABLE.  For
 #: "count", src_col is ignored (row count).
@@ -72,6 +72,10 @@ _SUBTRACTABLE = ("sum", "count")
 #: maintenance cannot drift): integral widths and decimals.  float /
 #: double are excluded — IEEE addition is not invertible.
 _EXACT_SUM_DTYPES = ("tinyint", "smallint", "int", "bigint")
+#: merge step per fn: how partials of the SAME group combine
+_MERGE = {"sum": F.sum, "count": F.sum, "min": F.min, "max": F.max}
+#: hidden per-group row count enabling group-drop detection in CDC mode
+_NROWS = "__nrows"
 
 
 def _sums_are_exact(stored_view: DataFrame, aggs: dict) -> bool:
@@ -90,10 +94,6 @@ def _sums_are_exact(stored_view: DataFrame, aggs: dict) -> bool:
         or (dtypes.get(o) or "").startswith("decimal")
         for o in sum_outs
     )
-#: merge step per fn: how partials of the SAME group combine
-_MERGE = {"sum": F.sum, "count": F.sum, "min": F.min, "max": F.max}
-#: hidden per-group row count enabling group-drop detection in CDC mode
-_NROWS = "__nrows"
 
 
 def _nn(out: str) -> str:
@@ -220,7 +220,6 @@ def refresh_matview(
     if not src_entries:
         raise FileNotFoundError(f"no commits at {src}")
     src_version = src_entries[-1]["version"]
-    base = src.rstrip("/")
 
     last = _last_refresh(spark, dst)
     if last is not None and last == src_version:
@@ -258,9 +257,7 @@ def refresh_matview(
 
     if incremental:
         delta_dirs = [d for e in delta_entries for d in e["dirs"]]
-        delta = spark.read.option("mergeSchema", "true").parquet(
-            *[f"{base}/{d}" for d in delta_dirs]
-        )
+        delta = _read_dirs(spark, src, delta_dirs)
         merged = _merge(
             _partial(delta, group_cols, aggs).unionByName(stored),
             group_cols,

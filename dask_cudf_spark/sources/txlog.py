@@ -9,19 +9,29 @@ Layout:
     <table>/_txlog/<version 12-digit>.json      one commit record each
 
 A commit record is ``{"version": N, "op": "append"|"overwrite",
-"dirs": [<data subdirs THIS commit added>]}``.  A reader replays the
-log in version order: ``overwrite`` resets the live set, ``append``
-extends it — so a read at version V sees exactly the committed state
-at V (snapshot isolation: concurrent writers never mutate files a
-reader already listed; data dirs are immutable once committed).
+"dirs": [<data subdirs THIS commit added>], "batch_id": <int|null>,
+"stats": <JSON string: per-dir min/max plus caller metadata>}``.  A
+reader replays the log in version order: ``overwrite`` resets the live
+set, ``append`` extends it — so a read at version V sees exactly the
+committed state at V (snapshot isolation: concurrent writers never
+mutate files a reader already listed; data dirs are immutable once
+committed).
 
 Commit atomicity = atomicity of creating the version file, done
 through the JVM Hadoop FileSystem with ``overwrite=false`` — the same
 create-exclusive primitive Delta's log relies on — so two racing
 writers cannot both win a version, and the loser retries on the next
-version number.  Everything goes through the Hadoop FS API, so the
-table works on any supported filesystem (local, hdfs://, s3a://
+version number.  ``commit``, ``merge_by_key`` and ``optimize`` all
+land their record through one writer (``_write_record``), so all
+three share the same version allocation, race retry, detect-and-abort
+and log checkpointing.  Everything goes through the Hadoop FS API, so
+the table works on any supported filesystem (local, hdfs://, s3a://
 modulo its create-exclusive semantics), not just local paths.
+
+Schema evolution is additive: a later commit may carry extra columns.
+Every data-dir read goes through one reader (``_read_dirs``) that
+merges parquet schemas, so older rows read a new column as null, and
+the dirs ``merge_by_key`` and ``optimize`` rewrite keep it.
 
 Scale: the log is O(commits) tiny JSON files, data files are never
 rewritten (append) or only logically retired (overwrite), and reads
@@ -55,8 +65,9 @@ def _race_backoff(attempt: int) -> None:
 
 class CommitConflict(Exception):
     """Another writer committed this version first; retrying the SAME
-    call is safe and is what commit()'s internal loop does before
-    giving up and surfacing this."""
+    call is safe and is what the record writer shared by commit,
+    merge_by_key and optimize does before giving up and surfacing
+    this."""
 
 
 class ConcurrentModification(CommitConflict):
@@ -182,11 +193,19 @@ def _list_log_files(jvm, fs, ld) -> list[str]:
 
 def _read_log_ex(
     spark: SparkSession, path: str
-) -> tuple[list[dict], int, int]:
-    """(entries, checkpoint_version, n_tail_files) — see _read_log."""
+) -> tuple[list[dict], int, int, int]:
+    """(entries, checkpoint_version, n_tail_files, max_version_on_disk)
+    — see _read_log.  The last is the highest version NUMBER present
+    as a _txlog filename (-1 when none), including orphaned empty/torn
+    files from crashed writers, which the parsed entries cannot see.
+    Writers allocate max(parsed latest, on-disk max) + 1: without the
+    on-disk term, an orphan at version V wedges the table forever
+    (every retry recomputes V from the parsed log and loses to the
+    orphan's file — the r11 soak deadlock, 'lost 5 commit races' on
+    the same filename)."""
     jvm, fs, ld = _jfs(spark, _log_dir(path))
     if not fs.exists(ld):
-        return [], -1, 0
+        return [], -1, 0, -1
     versions: list[tuple[int, str]] = []
     chks: list[tuple[int, str]] = []
     for full in _list_log_files(jvm, fs, ld):
@@ -221,7 +240,8 @@ def _read_log_ex(
             if parsed is not None:
                 entries.append(parsed)
     entries.sort(key=lambda e: e["version"])
-    return entries, chk_version, len(tail)
+    on_disk = max((v for v, _p in versions), default=-1)
+    return entries, chk_version, len(tail), on_disk
 
 
 def _read_log(spark: SparkSession, path: str) -> list[dict]:
@@ -238,8 +258,13 @@ def _read_log(spark: SparkSession, path: str) -> list[dict]:
     leaves a version file whose commit never happened — the slot reads
     as a GAP, its data dir stays unreferenced (vacuum reclaims it by
     age+reachability), and version numbering skips it via
-    _max_version_on_disk."""
+    _read_log_ex's on-disk max."""
     return _read_log_ex(spark, path)[0]
+
+
+def _encode(entry: dict) -> dict:
+    """A parsed entry in its on-disk form (stats as a JSON string)."""
+    return {**entry, "stats": json.dumps(entry["stats"] or {})}
 
 
 def _maybe_checkpoint(
@@ -261,7 +286,7 @@ def _maybe_checkpoint(
     (crashed writer) therefore stalls checkpoint ADVANCEMENT at the
     gap — reads degrade to O(commits-past-gap), never to wrong
     results; data-dir reachability and version allocation are
-    unaffected (_max_version_on_disk already skips past orphans)."""
+    unaffected (the on-disk max already skips past orphans)."""
     have = {e["version"] for e in entries}
     prefix_end = -1
     while prefix_end + 1 in have:
@@ -271,13 +296,7 @@ def _maybe_checkpoint(
     latest = prefix_end
     prefix = [e for e in entries if e["version"] <= prefix_end]
     payload = json.dumps(
-        {
-            "version": latest,
-            "entries": [
-                {**e, "stats": json.dumps(e["stats"] or {})}
-                for e in prefix
-            ],
-        }
+        {"version": latest, "entries": [_encode(e) for e in prefix]}
     ).encode()
     final = jvm.org.apache.hadoop.fs.Path(
         f"{_log_dir(path)}/chk-{latest:012d}.json"
@@ -301,27 +320,94 @@ def _maybe_checkpoint(
             pass
 
 
-def _max_version_on_disk(jvm, fs, path: str) -> int:
-    """Highest version NUMBER present as a _txlog filename, -1 when
-    none — including orphaned empty/torn files from crashed writers,
-    which _read_log's parsed view cannot see.  Writers allocate
-    max(parsed latest, on-disk max) + 1: without the on-disk term, an
-    orphan at version V wedges the table forever (every retry
-    recomputes V from the parsed log and loses to the orphan's file —
-    the r11 soak deadlock, 'lost 5 commit races' on the same
-    filename)."""
-    ld = jvm.org.apache.hadoop.fs.Path(_log_dir(path))
-    if not fs.exists(ld):
-        return -1
-    mx = -1
-    for full in _list_log_files(jvm, fs, ld):
-        name = full.rsplit("/", 1)[-1]
-        if name.endswith(".json"):
-            try:
-                mx = max(mx, int(name[: -len(".json")]))
-            except ValueError:
-                pass  # foreign file in the log dir: not a version slot
-    return mx
+def _write_record(
+    spark: SparkSession,
+    path: str,
+    op: str,
+    dirs: list[str],
+    max_retries: int,
+    batch_id: int | None = None,
+    stats: dict | None = None,
+    expect_live: list[str] | None = None,
+) -> tuple[int, list[dict] | None]:
+    """Append one record to the log — the version-allocation loop
+    ``commit``, ``merge_by_key`` and ``optimize`` share.  Returns
+    (version, log including the new record), or (version, None) when
+    ``batch_id`` dedup found the record already written.
+
+    Each attempt reads the log once, then:
+
+    - ``batch_id``: a record already stamped with it means a racing
+      replay of the same batch won — return its version, write nothing;
+    - ``expect_live``: the live set the caller's output was computed
+      against.  If another writer moved it since, committing would
+      silently drop that writer's dirs, so raise ConcurrentModification
+      (detect-and-abort);
+    - allocate max(parsed latest, on-disk max) + 1 and create that
+      version file exclusively; a lost race backs off and retries;
+    - advance the log checkpoint once the tail passes
+      CHECKPOINT_INTERVAL."""
+    jvm, fs, _ = _jfs(spark, path)
+    last_err: Exception | None = None
+    for attempt in range(max_retries):
+        log, chk_version, _ntail, on_disk = _read_log_ex(spark, path)
+        if batch_id is not None:
+            done = [e for e in log if e["batch_id"] == batch_id]
+            if done:
+                return done[0]["version"], None
+        if expect_live is not None and _live_dirs(log, None) != expect_live:
+            raise ConcurrentModification(
+                f"concurrent commit detected on {path}: the live set "
+                "changed since this operation's snapshot — re-run it "
+                "against the current table state"
+            )
+        version = max(log[-1]["version"] if log else -1, on_disk) + 1
+        entry = {
+            "version": version,
+            "op": op,
+            "dirs": dirs,
+            "batch_id": batch_id,
+            "stats": stats or {},
+        }
+        vpath = jvm.org.apache.hadoop.fs.Path(
+            f"{_log_dir(path)}/{version:012d}.json"
+        )
+        fs.mkdirs(vpath.getParent())
+        try:
+            out = fs.create(vpath, False)  # overwrite=False: exclusive
+        except Exception as e:  # FileAlreadyExistsException et al.
+            last_err = e
+            _race_backoff(attempt)
+            continue  # lost the race: re-read, reallocate
+        try:
+            out.write(json.dumps(_encode(entry)).encode())
+        finally:
+            out.close()
+        log = log + [entry]
+        _maybe_checkpoint(jvm, fs, path, log, chk_version)
+        return version, log
+    raise CommitConflict(
+        f"lost {max_retries} commit races on {path}"
+    ) from last_err
+
+
+def _fs_now_ms(jvm, fs, probe_dir: str) -> float:
+    """"Now" on the FILESYSTEM's clock, in ms: the mtime of a probe
+    file created in ``probe_dir`` and deleted at once, so comparing it
+    with file mtimes stays same-clock even on remote filesystems
+    (s3a/hdfs) whose server time is skewed from the driver.  Falls back
+    to driver time if the probe can't be written."""
+    now_ms = time.time() * 1000.0
+    probe = jvm.org.apache.hadoop.fs.Path(
+        f"{probe_dir}/.clock-probe-{uuid.uuid4().hex}"
+    )
+    try:
+        fs.create(probe, True).close()
+        now_ms = float(fs.getFileStatus(probe).getModificationTime())
+        fs.delete(probe, False)
+    except Exception:
+        pass  # driver-clock fallback (local fs shares the clock anyway)
+    return now_ms
 
 
 def _live_dirs(entries: list[dict], version: int | None) -> list[str]:
@@ -343,6 +429,27 @@ def _require_staged(spark: SparkSession, path: str, staged_dir: str) -> None:
         raise FileNotFoundError(f"staged dir {staged_dir!r} not in {path}")
 
 
+def _write_dir(df: DataFrame, path: str, tag: str = "") -> str:
+    """Write ``df`` as a fresh ``data/<uuid><tag>`` dir under ``path``
+    and return the dir name — the one data-dir writer.  Invisible to
+    readers until a log record references it."""
+    data_dir = f"data/{uuid.uuid4().hex}{tag}"
+    df.write.mode("errorifexists").parquet(f"{path.rstrip('/')}/{data_dir}")
+    return data_dir
+
+
+def _read_dirs(spark: SparkSession, path: str, dirs: list[str]) -> DataFrame:
+    """The one data-dir reader: ``dirs`` under ``path`` with parquet
+    schemas MERGED, so a column added by a later commit reads as null
+    on older rows instead of vanishing with whichever footer Spark
+    inferred from.  Merge and compaction rewrites read through here
+    too, so the dirs they write carry the evolved schema."""
+    base = path.rstrip("/")
+    return spark.read.option("mergeSchema", "true").parquet(
+        *[f"{base}/{d}" for d in dirs]
+    )
+
+
 def stage_commit_data(df: DataFrame, path: str) -> str:
     """Write ``df``'s data dir for a FUTURE commit/merge and return the
     dir name (``data/<uuid>``) — the write half of ``commit`` split out
@@ -357,12 +464,7 @@ def stage_commit_data(df: DataFrame, path: str) -> str:
     where the inline write used to.  A staged dir that never gets
     committed is identical to an aborted commit's dir: unreferenced,
     reclaimed by ``vacuum``."""
-    cid = uuid.uuid4().hex
-    data_dir = f"data/{cid}"
-    df.write.mode("errorifexists").parquet(
-        f"{path.rstrip('/')}/{data_dir}"
-    )
-    return data_dir
+    return _write_dir(df, path)
 
 
 def commit(
@@ -429,20 +531,15 @@ def commit(
         _require_staged(spark, path, staged_dir)
         data_dir = staged_dir
     else:
-        cid = uuid.uuid4().hex
-        data_dir = f"data/{cid}"
-        df.write.mode("errorifexists").parquet(
-            f"{path.rstrip('/')}/{data_dir}"
-        )
+        data_dir = _write_dir(df, path)
     stats: dict = {}
     if stats_cols:
         from pyspark.sql import functions as F
 
-        written = spark.read.parquet(f"{path.rstrip('/')}/{data_dir}")
         aggs = []
         for c in stats_cols:
             aggs += [F.min(c).alias(f"mn_{c}"), F.max(c).alias(f"mx_{c}")]
-        row = written.agg(*aggs).collect()[0]
+        row = _read_dirs(spark, path, [data_dir]).agg(*aggs).collect()[0]
         stats = {
             data_dir: {
                 c: [row[f"mn_{c}"], row[f"mx_{c}"]] for c in stats_cols
@@ -451,63 +548,19 @@ def commit(
     if extra_stats:
         stats.update(extra_stats)
 
-    jvm, fs, _ = _jfs(spark, path)
-    last_err: Exception | None = None
-    for attempt in range(max_retries):
-        log, chk_version, _ntail = _read_log_ex(spark, path)
-        if batch_id is not None:
-            done = [e for e in log if e.get("batch_id") == batch_id]
-            if done:  # raced replay of the same batch: someone else won
-                return done[0]["version"]
-        version = max(
-            log[-1]["version"] if log else -1,
-            _max_version_on_disk(jvm, fs, path),
-        ) + 1
-        record = json.dumps(
-            {
-                "version": version,
-                "op": op,
-                "dirs": [data_dir],
-                "batch_id": batch_id,
-                "stats": json.dumps(stats),
-            }
-        ).encode()
-        vpath = jvm.org.apache.hadoop.fs.Path(
-            f"{_log_dir(path)}/{version:012d}.json"
-        )
-        fs.mkdirs(vpath.getParent())
+    version, log = _write_record(
+        spark, path, op, [data_dir], max_retries, batch_id, stats
+    )
+    if (
+        log is not None
+        and auto_optimize_every
+        and len(_live_dirs(log, None)) >= auto_optimize_every
+    ):
         try:
-            out = fs.create(vpath, False)  # overwrite=False: exclusive
-        except Exception as e:  # FileAlreadyExistsException et al.
-            last_err = e
-            _race_backoff(attempt)
-            continue  # lost the race: recompute version, retry
-        try:
-            out.write(record)
-        finally:
-            out.close()
-        new_log = log + [
-            {
-                "version": version,
-                "op": op,
-                "dirs": [data_dir],
-                "batch_id": batch_id,
-                "stats": stats,
-            }
-        ]
-        _maybe_checkpoint(jvm, fs, path, new_log, chk_version)
-        if (
-            auto_optimize_every
-            and len(_live_dirs(new_log, None)) >= auto_optimize_every
-        ):
-            try:
-                optimize(spark, path)
-            except (ConcurrentModification, CommitConflict):
-                pass  # a racing writer moved the table; next boundary compacts
-        return version
-    raise CommitConflict(
-        f"lost {max_retries} commit races on {path}"
-    ) from last_err
+            optimize(spark, path)
+        except (ConcurrentModification, CommitConflict):
+            pass  # a racing writer moved the table; next boundary compacts
+    return version
 
 
 def snapshot_dirs(
@@ -563,18 +616,10 @@ def read_snapshot(
     metadata-only plan) so callers can chain .filter()/.count()
     uniformly instead of crashing on None."""
     dirs = snapshot_dirs(spark, path, version, prune)
-    if not dirs:
-        dirs = snapshot_dirs(spark, path, version, None)
-        return (
-            spark.read.option("mergeSchema", "true")
-            .parquet(*[f"{path.rstrip('/')}/{d}" for d in dirs])
-            .limit(0)
-        )
-    return (
-        spark.read.option("mergeSchema", "true").parquet(
-            *[f"{path.rstrip('/')}/{d}" for d in dirs]
-        )
-    )
+    if dirs:
+        return _read_dirs(spark, path, dirs)
+    dirs = snapshot_dirs(spark, path, version, None)
+    return _read_dirs(spark, path, dirs).limit(0)
 
 
 def table_history(spark: SparkSession, path: str) -> list[dict]:
@@ -627,15 +672,12 @@ def change_feed(
     for v in (from_version, to_version):
         if v > latest:
             raise ValueError(f"version {v} > latest {latest}")
-    base = path.rstrip("/")
     d_from = set(_live_dirs(entries, from_version))
     d_to = set(_live_dirs(entries, to_version))
 
     def _side(dirs: set) -> DataFrame:
         src = sorted(dirs) or sorted(d_to | d_from)  # schema-only read
-        df = spark.read.option("mergeSchema", "true").parquet(
-            *[f"{base}/{d}" for d in src]
-        )
+        df = _read_dirs(spark, path, src)
         return df if dirs else df.limit(0)
 
     pre0, post0 = _side(d_from - d_to), _side(d_to - d_from)
@@ -715,11 +757,11 @@ def merge_by_key(
     Concurrency: survivors/rewrites are computed against a LOG SNAPSHOT;
     if any other writer commits between that snapshot and this merge's
     version-file create, blindly committing the stale survivor list
-    would silently drop the concurrent commit's dirs.  The retry loop
-    therefore re-reads the log and ABORTS with CommitConflict when the
-    live set moved — the same detect-and-abort contract Delta's
-    ConcurrentAppendException implements; the caller re-runs the merge
-    against the new snapshot."""
+    would silently drop the concurrent commit's dirs, so the merge
+    ABORTS with ConcurrentModification instead — the same
+    detect-and-abort contract Delta's ConcurrentAppendException
+    implements; the caller re-runs the merge against the new
+    snapshot."""
     spark = updates.sparkSession
     from pyspark.sql import functions as F
 
@@ -727,7 +769,6 @@ def merge_by_key(
     if not entries:
         raise FileNotFoundError(f"no commits at {path}")
     live = _live_dirs(entries, None)
-    base = path.rstrip("/")
 
     # Write the update rows FIRST (r15, guide §1.2/§5): the old order
     # evaluated the caller's ``updates`` lineage THREE times — once per
@@ -744,20 +785,16 @@ def merge_by_key(
     # thread overlapping earlier lifecycle jobs — so the write is
     # skipped and the keys derive from the staged parquet, keeping the
     # r15 evaluate-once/consistency property verbatim.
-    cid = uuid.uuid4().hex
     if staged_dir is not None:
         _require_staged(spark, path, staged_dir)
         upd_dir = staged_dir
     else:
-        upd_dir = f"data/{cid}-upd"
-        updates.write.mode("errorifexists").parquet(f"{base}/{upd_dir}")
-    keys = (
-        spark.read.parquet(f"{base}/{upd_dir}").select(key).distinct()
-    )
+        upd_dir = _write_dir(updates, path, "-upd")
+    keys = _read_dirs(spark, path, [upd_dir]).select(key).distinct()
     touched: set[str] = set()
     if live:
         tagged = (
-            spark.read.parquet(*[f"{base}/{d}" for d in live])
+            _read_dirs(spark, path, live)
             .select(key, F.input_file_name().alias("__file"))
             .join(F.broadcast(keys), key, "left_semi")
             .select("__file")
@@ -773,57 +810,15 @@ def merge_by_key(
 
     new_dirs = []
     if touched:
-        keep_dir = f"data/{cid}-keep"
-        (
-            spark.read.parquet(*[f"{base}/{d}" for d in sorted(touched)])
-            .join(F.broadcast(keys), key, "left_anti")
-            .write.mode("errorifexists")
-            .parquet(f"{base}/{keep_dir}")
+        keep = _read_dirs(spark, path, sorted(touched)).join(
+            F.broadcast(keys), key, "left_anti"
         )
-        new_dirs.append(keep_dir)
+        new_dirs.append(_write_dir(keep, path, "-keep"))
     new_dirs.append(upd_dir)
-
-    jvm, fs, _ = _jfs(spark, path)
-    last_err: Exception | None = None
-    for attempt in range(max_retries):
-        log = _read_log(spark, path)
-        if _live_dirs(log, None) != live:
-            # A concurrent writer committed since our snapshot: the
-            # survivor list is stale and committing it would drop that
-            # writer's data.  Abort — never silently lose a commit.
-            raise ConcurrentModification(
-                f"concurrent commit detected on {path} during merge; "
-                "live set changed since the merge snapshot — re-run "
-                "the merge against the current table state"
-            )
-        version = max(
-            log[-1]["version"] if log else -1,
-            _max_version_on_disk(jvm, fs, path),
-        ) + 1
-        record = json.dumps(
-            {
-                "version": version,
-                "op": "overwrite",
-                "dirs": survivors + new_dirs,
-            }
-        ).encode()
-        vpath = jvm.org.apache.hadoop.fs.Path(
-            f"{_log_dir(path)}/{version:012d}.json"
-        )
-        try:
-            out = fs.create(vpath, False)
-        except Exception as e:
-            last_err = e
-            _race_backoff(attempt)
-            continue
-        try:
-            out.write(record)
-        finally:
-            out.close()
-        return version
-    raise CommitConflict(
-        f"lost {max_retries} commit races on {path}"
-    ) from last_err
+    return _write_record(
+        spark, path, "overwrite", survivors + new_dirs, max_retries,
+        expect_live=live,
+    )[0]
 
 
 def optimize(
@@ -836,57 +831,18 @@ def optimize(
     ``target_partitions`` files under one new dir and commit it as an
     overwrite — contents identical, small-file count collapsed.  Time
     travel to pre-compaction versions still works (old dirs remain on
-    disk until vacuum)."""
+    disk until vacuum).  Same detect-and-abort as merge_by_key: a
+    commit landing during the rewrite raises ConcurrentModification
+    instead of vanishing from the compacted overwrite."""
     entries = _read_log(spark, path)
     if not entries:
         raise FileNotFoundError(f"no commits at {path}")
     live = _live_dirs(entries, None)
-    base = path.rstrip("/")
-    cid = uuid.uuid4().hex
-    new_dir = f"data/{cid}-compact"
-    (
-        spark.read.parquet(*[f"{base}/{d}" for d in live])
-        .repartition(target_partitions)
-        .write.mode("errorifexists")
-        .parquet(f"{base}/{new_dir}")
-    )
-    jvm, fs, _ = _jfs(spark, path)
-    last_err: Exception | None = None
-    for attempt in range(max_retries):
-        log = _read_log(spark, path)
-        if _live_dirs(log, None) != live:
-            # Same detect-and-abort as merge_by_key: a concurrent
-            # append's rows would otherwise vanish from the compacted
-            # overwrite.
-            raise ConcurrentModification(
-                f"concurrent commit detected on {path} during optimize; "
-                "live set changed since the compaction snapshot — "
-                "re-run optimize against the current table state"
-            )
-        version = max(
-            log[-1]["version"] if log else -1,
-            _max_version_on_disk(jvm, fs, path),
-        ) + 1
-        record = json.dumps(
-            {"version": version, "op": "overwrite", "dirs": [new_dir]}
-        ).encode()
-        vpath = jvm.org.apache.hadoop.fs.Path(
-            f"{_log_dir(path)}/{version:012d}.json"
-        )
-        try:
-            out = fs.create(vpath, False)
-        except Exception as e:
-            last_err = e
-            _race_backoff(attempt)
-            continue
-        try:
-            out.write(record)
-        finally:
-            out.close()
-        return version
-    raise CommitConflict(
-        f"lost {max_retries} commit races on {path}"
-    ) from last_err
+    compacted = _read_dirs(spark, path, live).repartition(target_partitions)
+    new_dir = _write_dir(compacted, path, "-compact")
+    return _write_record(
+        spark, path, "overwrite", [new_dir], max_retries, expect_live=live
+    )[0]
 
 
 def heal_log_gaps(
@@ -921,24 +877,12 @@ def heal_log_gaps(
     but paused longer than the grace between create and write would
     have its eventual commit silently shadowed — the same
     impossible-to-distinguish case vacuum's grace exists for."""
-    import time as _time
-
     jvm, fs, _ = _jfs(spark, path)
-    entries = _read_log(spark, path)
+    entries, _chk, _ntail, mx_disk = _read_log_ex(spark, path)
     parsed = {e["version"] for e in entries}
-    mx_disk = _max_version_on_disk(jvm, fs, path)
     if mx_disk < 0:
         return []
-    now_ms = _time.time() * 1000.0
-    probe = jvm.org.apache.hadoop.fs.Path(
-        f"{_log_dir(path)}/.heal-probe-{uuid.uuid4().hex}"
-    )
-    try:
-        fs.create(probe, True).close()
-        now_ms = float(fs.getFileStatus(probe).getModificationTime())
-        fs.delete(probe, False)
-    except Exception:
-        pass  # driver-clock fallback (local fs shares the clock anyway)
+    now_ms = _fs_now_ms(jvm, fs, _log_dir(path))
     healed: list[int] = []
     for v in range(0, mx_disk + 1):
         if v in parsed:
@@ -954,15 +898,8 @@ def heal_log_gaps(
             continue
         if now_ms - st.getModificationTime() < min_age_seconds * 1000.0:
             continue  # could still be in-flight: respect the grace
-        record = json.dumps(
-            {
-                "version": v,
-                "op": "append",
-                "dirs": [],
-                "batch_id": None,
-                "stats": "{}",
-            }
-        ).encode()
+        noop = {"version": v, "op": "append", "dirs": [], "batch_id": None}
+        record = json.dumps(_encode({**noop, "stats": {}})).encode()
         try:
             out = fs.create(vpath, True)  # overwrite: we own the window
             try:
@@ -1001,8 +938,6 @@ def vacuum(
     driver wall-clock could otherwise under-estimate a fresh in-flight
     commit dir's age and delete it.  Falls back to driver time if the
     probe can't be written."""
-    import time as _time
-
     entries = _read_log(spark, path)
     if not entries:
         return 0
@@ -1017,16 +952,7 @@ def vacuum(
     removed = 0
     if not fs.exists(data_root):
         return 0
-    now_ms = _time.time() * 1000.0
-    probe = jvm.org.apache.hadoop.fs.Path(
-        f"{base}/data/.vacuum-probe-{uuid.uuid4().hex}"
-    )
-    try:
-        fs.create(probe, True).close()
-        now_ms = float(fs.getFileStatus(probe).getModificationTime())
-        fs.delete(probe, False)
-    except Exception:
-        pass  # driver-clock fallback (local fs shares the clock anyway)
+    now_ms = _fs_now_ms(jvm, fs, f"{base}/data")
     for st in fs.listStatus(data_root):
         d = f"data/{st.getPath().getName()}"
         if d in reachable:

@@ -697,12 +697,14 @@ def test_txlog_pruned_to_empty_returns_empty_frame(spark, tmp_path):
     assert df.filter(F.col("k") > 0).count() == 0
 
 
-def test_txlog_concurrent_commit_aborts_merge(spark, tmp_path, monkeypatch):
-    """ADVICE r5 lost-update guard: a commit landing between merge's
-    log snapshot and its overwrite must ABORT the merge (Delta's
-    ConcurrentAppendException contract), never silently drop the
-    concurrent commit's data."""
-    import pytest
+@pytest.mark.parametrize("op", ["merge_by_key", "optimize"])
+def test_txlog_concurrent_commit_aborts_merge(
+    spark, tmp_path, monkeypatch, op
+):
+    """ADVICE r5 lost-update guard: a commit landing between a merge's
+    or compaction's log snapshot and its overwrite must ABORT it
+    (Delta's ConcurrentAppendException contract), never silently drop
+    the concurrent commit's data."""
     from pyspark.sql import functions as F
 
     from dask_cudf_spark.sources import txlog
@@ -711,6 +713,7 @@ def test_txlog_concurrent_commit_aborts_merge(spark, tmp_path, monkeypatch):
         ConcurrentModification,
         commit,
         merge_by_key,
+        optimize,
         read_snapshot,
     )
 
@@ -734,8 +737,8 @@ def test_txlog_concurrent_commit_aborts_merge(spark, tmp_path, monkeypatch):
         log = real(spark_, p)
         state["calls"] += 1
         if state["calls"] == 1:
-            # concurrent writer lands an append AFTER merge takes its
-            # snapshot but BEFORE its commit-loop re-read
+            # concurrent writer lands an append AFTER the operation
+            # takes its snapshot but BEFORE its record write re-reads
             state["nested"] = True
             try:
                 commit(
@@ -751,7 +754,10 @@ def test_txlog_concurrent_commit_aborts_merge(spark, tmp_path, monkeypatch):
 
     monkeypatch.setattr(txlog, "_read_log", racing)
     with pytest.raises(ConcurrentModification, match="concurrent commit"):
-        merge_by_key(upd, path, "k")
+        if op == "merge_by_key":
+            merge_by_key(upd, path, "k")
+        else:
+            optimize(spark, path)
     monkeypatch.setattr(txlog, "_read_log", real)
     # the concurrent append's rows are intact: nothing was lost
     assert read_snapshot(spark, path).count() == 15
@@ -761,22 +767,65 @@ def test_txlog_schema_evolution(spark, tmp_path):
     """Additive schema evolution: a later commit may carry extra
     columns; snapshot reads merge schemas (old rows get nulls), and
     time travel to the pre-evolution version sees the old schema
-    only."""
-    from dask_cudf_spark.sources.txlog import commit, read_snapshot
+    only.  The evolved column survives optimize and a merge whose
+    touched dirs span both schemas: the rewritten dirs keep it and
+    carried rows keep their values."""
+    from dask_cudf_spark.sources.txlog import (
+        commit,
+        merge_by_key,
+        optimize,
+        read_snapshot,
+    )
+
+    def rows(df):
+        return {r["k"]: (r["v"], r["score"]) for r in df.collect()}
 
     path = str(tmp_path / "txevo")
+    # old-schema dirs are named to sort before the evolved ones, so a
+    # rewrite that infers the schema from the first footer drops score
     v0 = spark.createDataFrame([(1, "a")], "k long, v string")
-    commit(v0, path, "append")
+    v0.write.parquet(f"{path}/data/0-base")
+    commit(v0, path, "append", staged_dir="data/0-base")
     v1 = spark.createDataFrame(
         [(2, "b", 9.5)], "k long, v string, score double"
     )
     commit(v1, path, "append")
     cur = read_snapshot(spark, path)
     assert set(cur.columns) == {"k", "v", "score"}
-    rows = {r["k"]: (r["v"], r["score"]) for r in cur.collect()}
-    assert rows == {1: ("a", None), 2: ("b", 9.5)}
+    assert rows(cur) == {1: ("a", None), 2: ("b", 9.5)}
     old = read_snapshot(spark, path, version=0)
     assert set(old.columns) == {"k", "v"}
+
+    optimize(spark, path)
+    cur = read_snapshot(spark, path)
+    assert set(cur.columns) == {"k", "v", "score"}
+    assert rows(cur) == {1: ("a", None), 2: ("b", 9.5)}
+
+    old_rows = spark.createDataFrame([(3, "c"), (6, "f")], "k long, v string")
+    old_rows.write.parquet(f"{path}/data/0-old")
+    commit(old_rows, path, "append", staged_dir="data/0-old")
+    commit(
+        spark.createDataFrame(
+            [(4, "d", 1.0), (5, "e", 2.0)], "k long, v string, score double"
+        ),
+        path,
+        "append",
+    )
+    # keys 3 and 5 touch one dir of each schema; 6 and 4 are carried
+    upd = spark.createDataFrame(
+        [(3, "C", 3.0), (5, "E", 5.0)], "k long, v string, score double"
+    )
+    merge_by_key(upd, path, "k")
+    cur = read_snapshot(spark, path)
+    assert set(cur.columns) == {"k", "v", "score"}
+    assert rows(cur) == {
+        1: ("a", None),
+        2: ("b", 9.5),
+        3: ("C", 3.0),
+        4: ("d", 1.0),
+        5: ("E", 5.0),
+        6: ("f", None),
+    }
 
 
 def test_matview_incremental_refresh_matches_full_recompute(spark, tmp_path):
@@ -1240,6 +1289,46 @@ def test_txlog_checkpoint_compaction(spark, tmp_path, monkeypatch):
     assert got == [6, 7, 8, 10]
 
 
+def test_txlog_merge_and_optimize_checkpoint(spark, tmp_path, monkeypatch):
+    """merge_by_key and optimize records advance the log checkpoint
+    like commit's: a table written by merges and a compaction past
+    CHECKPOINT_INTERVAL gets chk-*.json files, snapshots at every
+    version before and after each checkpoint equal the model, and the
+    checkpointed log equals the pure per-version-file replay."""
+    from dask_cudf_spark.sources import txlog
+
+    monkeypatch.setattr(txlog, "CHECKPOINT_INTERVAL", 3)
+    path = str(tmp_path / "chkmerge")
+    base = spark.createDataFrame([(0, 0)], "k long, v long")
+    assert txlog.commit(base, path) == 0
+    # merge i inserts key i and updates key 0: versions 1..7
+    for i in range(1, 8):
+        upd = spark.createDataFrame([(0, i), (i, i)], "k long, v long")
+        assert txlog.merge_by_key(upd, path, "k") == i
+    assert txlog.optimize(spark, path) == 8
+
+    logdir = tmp_path / "chkmerge" / "_txlog"
+    chks = sorted(p.name for p in logdir.iterdir() if p.name[:4] == "chk-")
+    assert chks == [f"chk-{v:012d}.json" for v in (2, 5, 8)], chks
+
+    def model(v):
+        return sorted({0: v, **{j: j for j in range(1, v + 1)}}.items())
+
+    for v in range(9):
+        got = txlog.read_snapshot(spark, path, version=v).collect()
+        assert sorted((r["k"], r["v"]) for r in got) == model(min(v, 7))
+    entries_chk, chk_v, ntail, _ = txlog._read_log_ex(spark, path)
+    assert (chk_v, ntail) == (8, 0)
+    for p in logdir.iterdir():
+        if p.name.startswith("chk-"):
+            p.rename(p.with_suffix(".bak"))
+    entries_raw, chk_v_raw, _, _ = txlog._read_log_ex(spark, path)
+    assert chk_v_raw == -1
+    assert [(e["version"], e["op"], e["dirs"]) for e in entries_raw] == [
+        (e["version"], e["op"], e["dirs"]) for e in entries_chk
+    ]
+
+
 def test_txlog_checkpoint_read_path_used(spark, tmp_path, monkeypatch):
     """The reader must actually consume the checkpoint: after one
     exists, _read_log_ex reports a bounded tail, and deleting every
@@ -1254,7 +1343,7 @@ def test_txlog_checkpoint_read_path_used(spark, tmp_path, monkeypatch):
     for i in range(5):
         one = spark.createDataFrame([(i,)], "k long")
         txlog.commit(one, path)
-    entries, chk_v, ntail = txlog._read_log_ex(spark, path)
+    entries, chk_v, ntail, _ = txlog._read_log_ex(spark, path)
     assert chk_v >= 2, f"no checkpoint consumed (chk_v={chk_v})"
     assert ntail == 5 - (chk_v + 1)
     before = [(e["version"], e["op"]) for e in entries]
@@ -1265,7 +1354,7 @@ def test_txlog_checkpoint_read_path_used(spark, tmp_path, monkeypatch):
         if not name.startswith("chk-") and name.endswith(".json"):
             if int(name[:-5]) <= chk_v:
                 os.remove(p)
-    entries2, chk_v2, _ = txlog._read_log_ex(spark, path)
+    entries2, chk_v2, _, _ = txlog._read_log_ex(spark, path)
     assert chk_v2 == chk_v
     assert [(e["version"], e["op"]) for e in entries2] == before
     assert txlog.read_snapshot(spark, path).count() == 5
@@ -1321,7 +1410,7 @@ def test_txlog_two_process_race_across_checkpoint_boundary(
             v = p.name.split(".")[0].lstrip(".")
             assert any(c.name.startswith(v.split(".")[0]) for c in chks)
 
-    entries_chk, chk_v, _ = txlog._read_log_ex(spark, path)
+    entries_chk, chk_v, _, _ = txlog._read_log_ex(spark, path)
     assert chk_v >= 0
     # pure per-file replay (checkpoints moved aside) must agree exactly
     moved = []
@@ -1330,7 +1419,7 @@ def test_txlog_two_process_race_across_checkpoint_boundary(
         p.rename(q)
         moved.append(q)
     try:
-        entries_raw, chk_v_raw, _ = txlog._read_log_ex(spark, path)
+        entries_raw, chk_v_raw, _, _ = txlog._read_log_ex(spark, path)
         assert chk_v_raw == -1
         assert [
             (e["version"], e["op"], e["dirs"]) for e in entries_raw
