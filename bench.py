@@ -15,11 +15,11 @@ query's intrinsic cost under external interference.
 
 Noise attribution (round-3 VERDICT item 2): every sample — warm-ups
 included — carries its wall time, the /proc/stat steal-tick delta over
-the sample, and a digest of the POST-EXECUTION physical plan (AQE
-final; expression ids normalized away).  A slow sample with high
-steal_ms is hypervisor noise; a slow sample whose plan digest differs
-from the fast samples' is a real replan (e.g. broadcast -> SMJ
-fallback).  The stdout JSON stays one COMPACT line ("queries" keeps
+the sample, and `plans.plan_digest` of the POST-EXECUTION physical plan
+tree (AQE final; node names and descriptions, digits stripped).  A slow
+sample with high steal_ms is hypervisor noise; a slow sample whose plan
+digest differs from the fast samples' is a real replan (e.g. broadcast
+-> SMJ fallback).  The stdout JSON stays one COMPACT line ("queries" keeps
 its historical shape); per-sample diagnostics go to the BENCH_DIAG.json
 sidecar (round-4 regression fix: the inline "samples" blob outgrew the
 driver's tail capture and BENCH_r04 parsed null).
@@ -34,6 +34,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from dask_cudf_spark.plans import plan_digest, plan_nodes
 from dask_cudf_spark.registry import all_queries
 from dask_cudf_spark.session import get_spark
 
@@ -51,69 +52,6 @@ def _steal_ticks() -> int:
     except (OSError, IndexError, ValueError):
         return 0
 
-
-def _plan_digest(df) -> str:
-    """8-hex digest of the executed physical plan with volatile tokens
-    (expression ids #123, plan_id, Statistics sizes) normalized, so two
-    runs of the same plan digest identically and a broadcast->SMJ
-    fallback or AQE replan changes the digest."""
-    import hashlib
-    import re
-
-    try:
-        plan = df._jdf.queryExecution().executedPlan().toString()
-    except Exception:
-        return "n/a"
-    plan = re.sub(r"Statistics\([^)]*\)", "Statistics()", plan)
-    # FileScan metadata (DataFilters/PushedFilters/Location/ReadSchema)
-    # is TRUNCATED at spark.sql.maxMetadataStringLength, and the cut
-    # point depends on how many characters the run's expression ids
-    # happened to use upstream of it — so the surviving tail text
-    # differs run to run even when the plan is IDENTICAL.  This was the
-    # entire "ppjoin plan flip" of rounds 10-11 (r12 bisect: 10 runs,
-    # 4 digests, node-type counts equal, char-level diff confined to
-    # the DataFilters truncation point).  Keep only the scan's stable
-    # identity — node type + read-column list (column pruning changes
-    # still flip the digest; metadata prose cannot).
-    # the name part is optional-and-qualified: bare path scans print
-    # "FileScan parquet [cols]", catalog tables (bucketed join path)
-    # print "FileScan parquet spark_catalog.default.tbl[cols]".
-    # PushedFilters IS kept (r12 ADVICE item 3: dropping the whole tail
-    # made the digest blind to a lost filter pushdown).  Unlike
-    # DataFilters, PushedFilters values carry NO expression ids (plain
-    # column names + literals), so their text is run-stable; the only
-    # instability is the per-value truncation at
-    # spark.sql.maxMetadataStringLength, handled by dropping a trailing
-    # partial token (the '...'-abbreviated one).
-    def _scan_repl(m):
-        head, tail = m.group(1), m.group(2)
-        # a truncated value has NO closing bracket — abbreviate() cuts
-        # the string and appends "..." (the next metadata key follows),
-        # so the list terminates at either a "]" that closes the LIST
-        # or "...".  Filter values may themselves contain "]" (e.g.
-        # In(c, [a,b])), so the closing "]" is only the one followed by
-        # the next metadata key or end-of-line (r13 ADVICE item 2 —
-        # the old first-"]" match truncated In()-values mid-list).
-        pf = re.search(
-            r"PushedFilters: \[(.*?)(\](?=$|, [A-Z]\w+: )|\.\.\.)", tail
-        )
-        if not pf:
-            return head
-        toks, term = pf.group(1), pf.group(2)
-        if term != "]":
-            # drop the '...'-abbreviated partial token; if NOTHING
-            # whole survives, emit a distinct marker so a fully-
-            # truncated list is never confused with a genuinely-empty
-            # PushedFilters: [] (a lost pushdown must flip the digest)
-            toks = toks.rsplit(",", 1)[0] if "," in toks else "?"
-        return head + " PF[" + toks + "]"
-
-    plan = re.sub(r"(FileScan \w+ [\w.$]*\[[^\]]*\])([^\n]*)", _scan_repl, plan)
-    # strip ALL numerals: expression ids, plan_ids, checkpoint RDD ids,
-    # AQE stage ids, row-count estimates — the digest is structural
-    # (operator tree + join strategies), which is what replans change
-    plan = re.sub(r"\d+", "", plan)
-    return hashlib.md5(plan.encode()).hexdigest()[:8]
 
 # Headline set: one per heavy operator family (SURVEY.md §6).
 HEADLINE = [
@@ -333,7 +271,7 @@ def main() -> None:
                     "sec": round(sec, 4),
                     "steal_ms": round((_steal_ticks() - s0) * 1000 / clk_tck),
                     "gc_ms": _gc_millis(spark) - g0,
-                    "plan": _plan_digest(df),
+                    "plan": plan_digest(plan_nodes(df)),
                     "warmup": rnd <= 1,
                 }
             )

@@ -1,20 +1,30 @@
 """Physical-plan audit: the 100TB-scale invariants as checkable facts.
 
-The reference exposes its plan as a dask expression tree / task graph;
-Spark's equivalent introspection surface is the explain output of the
-analyzed + optimized + physical plan. This module parses the formatted
-plan into a structured audit so engine code and tests can assert the
-properties that matter at scale — pushdown reached the scan, small dims
-broadcast, nothing fell out of codegen into Python, no accidental
-cartesian — instead of eyeballing explain() text.
+The reference exposes its plan as a dask expression tree; Spark's
+equivalent is the executed physical plan.  ``plan_nodes`` walks that
+tree the way Spark's SQL UI does (``SparkPlanInfo``): through the
+adaptive plan's current plan (initial before execution, final after),
+query stages, reused exchanges, cached relations and subqueries.
+Everything else here reads node names and scan metadata from that walk
+— ``audit`` counts operators, ``single_partition_window_feeds`` follows
+window inputs, ``plan_digest`` fingerprints a plan — so engine code and
+tests assert the properties that matter at scale (pushdown reached the
+scan, small dims broadcast, nothing fell out into Python, no accidental
+cartesian) without parsing explain text.
 """
 
 from __future__ import annotations
 
+import hashlib
 import re
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
+
+#: (depth, nodeName, simpleString, metadata) — one pre-order plan node;
+#: ``metadata`` is non-empty only for file scans, where it holds the
+#: unabbreviated PushedFilters / PartitionFilters / ReadSchema / ... map
+PlanNode = tuple[int, str, str, dict[str, str]]
 
 
 def explain_str(df: DataFrame, mode: str = "formatted") -> str:
@@ -24,11 +34,71 @@ def explain_str(df: DataFrame, mode: str = "formatted") -> str:
     )
 
 
+def plan_nodes(df: DataFrame) -> list[PlanNode]:
+    """Pre-order records of ``df``'s executed physical plan."""
+    jvm = df._sc._jvm
+    to_java = jvm.scala.jdk.javaapi.CollectionConverters.asJava
+    root = jvm.org.apache.spark.sql.execution.SparkPlanInfo.fromSparkPlan(
+        df._jdf.queryExecution().executedPlan()
+    )
+    nodes: list[PlanNode] = []
+    stack = [(0, root)]
+    while stack:
+        depth, info = stack.pop()
+        meta = info.metadata()
+        nodes.append((
+            depth,
+            info.nodeName(),
+            info.simpleString(),
+            {} if meta.isEmpty() else dict(to_java(meta)),
+        ))
+        kids = info.children()
+        stack.extend((depth + 1, kids.apply(i)) for i in reversed(range(kids.size())))
+    return nodes
+
+
+def descendants(nodes: list[PlanNode], i: int) -> list[PlanNode]:
+    """The subtree below ``nodes[i]``, in pre-order."""
+    end = i + 1
+    while end < len(nodes) and nodes[end][0] > nodes[i][0]:
+        end += 1
+    return nodes[i + 1 : end]
+
+
+def plan_digest(nodes: list[PlanNode]) -> str:
+    """8-hex structural digest of a ``plan_nodes`` list: tree shape,
+    node names and descriptions with every digit stripped (expression
+    ids, plan ids, stage ids, estimates), so two runs of one plan digest
+    alike while a broadcast -> SMJ fallback or an AQE replan does not.
+    A scan contributes its name, ReadSchema and PushedFilters instead of
+    its description, which Spark cuts at
+    ``spark.sql.maxMetadataStringLength`` at a point that moves with the
+    width of the run's expression ids."""
+    h = hashlib.md5()
+    for depth, name, desc, meta in nodes:
+        if meta:
+            desc = f"{meta.get('ReadSchema')} {meta.get('PushedFilters')}"
+        h.update(re.sub(r"\d+", "", f"{' ' * depth}{name} {desc}\n").encode())
+    return h.hexdigest()[:8]
+
+
+_PYTHON_NODES = {
+    "BatchEvalPython": "udf",
+    "ArrowEvalPython": "arrow-udf",
+    "FlatMapGroupsInPandas": "grouped-pd",
+    "MapInPandas": "map-pd",
+    "MapInArrow": "map-arrow",
+    "AggregateInPandas": "agg-pd",
+}
+
+
 @dataclass
 class PlanAudit:
+    nodes: list[PlanNode] = field(default_factory=list)
     pushed_filters: list[str] = field(default_factory=list)
     read_schemas: list[str] = field(default_factory=list)
-    n_exchanges: int = 0
+    #: data-moving exchanges (broadcast exchanges excluded)
+    n_shuffles: int = 0
     n_broadcast_exchanges: int = 0
     n_broadcast_hash_joins: int = 0
     n_sort_merge_joins: int = 0
@@ -38,112 +108,92 @@ class PlanAudit:
     n_hash_aggregates: int = 0
     python_nodes: list[str] = field(default_factory=list)
     has_take_ordered: bool = False
-    n_wholestage_codegen: int = 0
+    #: the formatted explain, for humans reading an assertion message
     text: str = ""
 
-    @property
-    def n_shuffles(self) -> int:
-        """Data-moving exchanges (broadcast exchanges excluded).
-
-        ``n_exchanges`` already counts only plain ``(n) Exchange`` nodes
-        (the regex cannot match ``(n) BroadcastExchange``), so it IS the
-        shuffle count; subtracting broadcasts again went negative on
-        broadcast-heavy plans and silently weakened every <= budget
-        assertion."""
-        return self.n_exchanges
-
-
-_PYTHON_NODES = (
-    "BatchEvalPython",
-    "ArrowEvalPython",
-    "FlatMapGroupsInPandas",
-    "MapInPandas",
-    "MapInArrow",
-    "AggregateInPandas",
-)
+    def summary(self) -> str:
+        """One-line plan fingerprint: shuffle/broadcast-exchange counts,
+        join strategies, Python boundaries, top-k."""
+        joins = [
+            f"{tag}x{n}"
+            for n, tag in [
+                (self.n_broadcast_hash_joins, "BHJ"),
+                (self.n_sort_merge_joins, "SMJ"),
+                (self.n_shuffled_hash_joins, "SHJ"),
+                (self.n_nested_loop_joins, "BNLJ"),
+                (self.n_cartesian, "CART"),
+            ]
+            if n
+        ]
+        parts = [f"sh={self.n_shuffles}", f"bx={self.n_broadcast_exchanges}"]
+        if joins:
+            parts.append("+".join(joins))
+        if self.python_nodes:
+            parts.append(
+                "py:" + ",".join(_PYTHON_NODES[n] for n in self.python_nodes)
+            )
+        if self.has_take_ordered:
+            parts.append("topk")
+        return " ".join(parts)
 
 
 def audit(df: DataFrame) -> PlanAudit:
-    p = explain_str(df, "formatted")
-    a = PlanAudit(text=p)
-    a.pushed_filters = [
-        m.strip() for m in re.findall(r"PushedFilters: \[([^\]]*)\]", p) if m.strip()
-    ]
-    a.read_schemas = re.findall(r"ReadSchema: (\S+)", p)
-    a.n_exchanges = len(re.findall(r"\bExchange\b|\b\d+\) Exchange\b", p)) or p.count(
-        " Exchange"
+    nodes = plan_nodes(df)
+    names = [name for _, name, _, _ in nodes]
+    scans = [meta for _, _, _, meta in nodes if meta]
+
+    def count(kind: str) -> int:
+        # substring: "SortMergeJoin(skew=true)", "ObjectHashAggregate"
+        return sum(kind in name for name in names)
+
+    return PlanAudit(
+        nodes=nodes,
+        pushed_filters=[
+            m["PushedFilters"][1:-1]
+            for m in scans
+            if m.get("PushedFilters", "[]") != "[]"
+        ],
+        read_schemas=[m["ReadSchema"] for m in scans if "ReadSchema" in m],
+        n_shuffles=names.count("Exchange"),
+        n_broadcast_exchanges=names.count("BroadcastExchange"),
+        n_broadcast_hash_joins=count("BroadcastHashJoin"),
+        n_sort_merge_joins=count("SortMergeJoin"),
+        n_shuffled_hash_joins=count("ShuffledHashJoin"),
+        n_nested_loop_joins=count("BroadcastNestedLoopJoin"),
+        n_cartesian=count("CartesianProduct"),
+        n_hash_aggregates=count("HashAggregate"),
+        python_nodes=[p for p in _PYTHON_NODES if count(p)],
+        has_take_ordered="TakeOrderedAndProject" in names,
+        text=explain_str(df),
     )
-    # formatted mode lists node names like "(4) Exchange"
-    a.n_exchanges = len(re.findall(r"\(\d+\) Exchange", p))
-    a.n_broadcast_exchanges = len(re.findall(r"\(\d+\) BroadcastExchange", p))
-    a.n_broadcast_hash_joins = p.count("BroadcastHashJoin")
-    a.n_sort_merge_joins = p.count("SortMergeJoin")
-    a.n_shuffled_hash_joins = p.count("ShuffledHashJoin")
-    a.n_nested_loop_joins = p.count("BroadcastNestedLoopJoin")
-    a.n_cartesian = p.count("CartesianProduct")
-    a.n_hash_aggregates = p.count("HashAggregate")
-    a.python_nodes = [n for n in _PYTHON_NODES if n in p]
-    a.has_take_ordered = "TakeOrderedAndProject" in p
-    a.n_wholestage_codegen = len(set(re.findall(r"WholeStageCodegen \((\d+)\)", p)))
-    if not a.n_wholestage_codegen:
-        a.n_wholestage_codegen = explain_str(df, "simple").count("*(")
-    return a
-
-
-_TREE_LINE = re.compile(
-    r"^([ :+\-*]*)([A-Za-z][A-Za-z0-9_ ]*?) \((\d+)\)\s*$"
-)
-#: physical nodes with more than one child: descending a straight input
-#: chain stops here (the window's partitioning then comes from the
-#: operator's own distribution, not an exchange above it)
-_MULTI_CHILD = (
-    "Join", "Union", "CartesianProduct", "CoGroup",
-)
 
 
 def single_partition_window_feeds(df: DataFrame) -> list[str]:
-    """Names+ids of ``Window`` nodes whose input chain is repartitioned
-    to a SINGLE partition (``Exchange SinglePartition`` directly on the
-    window's unary input chain) — the plan shape that serializes ALL
-    rows through one task and dies at 100 TB unless the input is
-    provably bounded (e.g. an aggregate over a fixed-cardinality key).
+    """``Window`` nodes whose input chain is repartitioned to a SINGLE
+    partition (``Exchange SinglePartition`` on the window's unary input
+    chain) — the plan shape that serializes ALL rows through one task
+    and dies at 100 TB unless the input is provably bounded (e.g. an
+    aggregate over a fixed-cardinality key).
 
-    Walks the formatted-plan tree: for each Window node, descend
-    through unary nodes (Sort/Project/Filter/...) to the first
-    Exchange and report the window if that exchange's detail block
-    says ``SinglePartition``.  Descent stops at multi-child nodes
-    (joins/unions): there the window's distribution is satisfied by
-    the child operator itself, not an inserted exchange."""
-    p = explain_str(df, "formatted")
-    nodes: list[tuple[int, str, int]] = []  # (depth, name, id)
-    for ln in p.splitlines():
-        if re.match(r"^\(\d+\) ", ln):
-            break  # details section
-        m = _TREE_LINE.match(ln)
-        if m:
-            prefix, name, nid = m.groups()
-            nodes.append((len(prefix), name.strip(), int(nid)))
-    # detail block per node id: "(n) NodeName" .. blank line
-    sp_exchanges: set[int] = set()
-    for blk in re.split(r"\n\s*\n", p):
-        first = blk.strip().splitlines()[0] if blk.strip() else ""
-        m = re.match(r"^\((\d+)\) Exchange\b", first)
-        if m and "SinglePartition" in blk:
-            sp_exchanges.add(int(m.group(1)))
+    Each Window descends through single-child nodes to the first
+    Exchange and is reported if that exchange is ``SinglePartition``.
+    Descent stops at a node with several children (joins, unions, a
+    hosted subquery): there the window's distribution is satisfied by
+    that operator itself, not an inserted exchange."""
+    nodes = plan_nodes(df)
     flagged: list[str] = []
-    for i, (depth, name, nid) in enumerate(nodes):
+    for i, (_, name, _, _) in enumerate(nodes):
         if name != "Window":
             continue
-        cur_depth = depth
-        for d2, n2, id2 in nodes[i + 1 :]:
-            if d2 <= cur_depth:
-                break  # left the subtree without finding an exchange
-            cur_depth = d2
-            if n2.startswith("Exchange"):
-                if id2 in sp_exchanges:
-                    flagged.append(f"Window({nid})<-Exchange({id2})")
+        j = i
+        while True:
+            below = descendants(nodes, j)
+            if sum(d == nodes[j][0] + 1 for d, _, _, _ in below) != 1:
                 break
-            if any(k in n2 for k in _MULTI_CHILD):
+            j += 1
+            if nodes[j][1] == "Exchange":
+                if "SinglePartition" in nodes[j][2]:
+                    flagged.append(f"Window#{i}<-Exchange#{j}")
                 break
     return flagged
 

@@ -1,7 +1,7 @@
 """Capture `.explain("formatted")` for the bench set (HEADLINE + EXTRA)
-into plans/<round>/<query>_<tag>.txt, plus a one-line structural
-summary (Exchange count, join strategies, Python-boundary nodes) on
-stdout.
+into plans/<round>/<query>_<tag>.txt, plus the one-line plan summary
+(`PlanAudit.summary()`: shuffles, broadcast exchanges, join strategies,
+Python-boundary nodes, top-k) on stdout.
 
 Usage:
     python scripts/capture_plans.py before [--sf-dir DIR] [--round rNN]
@@ -9,51 +9,21 @@ Usage:
     python scripts/capture_plans.py after  [--sf-dir DIR] [--round rNN]
                                     [name_substr ...]
 
-The plan is the ANALYZED+optimized pre-execution physical plan (AQE
-initial); the judge checks plan claims against these files, and the
-structural counts (Exchange / join strategy / BatchEvalPython) are
-stable pre-AQE.
+The plan is the pre-execution physical plan (AQE initial); plan claims
+are checked against these files.
 """
 
 from __future__ import annotations
 
 import os
-import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bench import EXTRA, HEADLINE  # noqa: E402
+from dask_cudf_spark.plans import audit  # noqa: E402
 from dask_cudf_spark.registry import all_queries  # noqa: E402
 from dask_cudf_spark.session import get_spark  # noqa: E402
-
-
-def formatted_plan(df) -> str:
-    jvm = df.sparkSession._jvm
-    return jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
-
-
-def summarize(plan: str) -> str:
-    counts = {
-        "Exchange": len(re.findall(r"\bExchange\b", plan)),
-        "BHJ": len(re.findall(r"\bBroadcastHashJoin\b", plan)),
-        "SMJ": len(re.findall(r"\bSortMergeJoin\b", plan)),
-        "SHJ": len(re.findall(r"\bShuffledHashJoin\b", plan)),
-        "BNLJ": len(re.findall(r"\bBroadcastNestedLoopJoin\b", plan)),
-        "Py": len(
-            re.findall(
-                r"\b(BatchEvalPython|ArrowEvalPython|MapInArrow|MapInPandas|"
-                r"FlatMapGroupsInPandas)\b",
-                plan,
-            )
-        ),
-        "Sort": len(re.findall(r"^\s*[+:-]*\s*\(?\d*\)?\s*Sort\b", plan, re.M)),
-        "Scan": len(re.findall(r"Scan parquet", plan)),
-        "Window": len(re.findall(r"\bWindow\b", plan)),
-    }
-    return " ".join(f"{k}={v}" for k, v in counts.items() if v)
 
 
 def main() -> None:
@@ -93,15 +63,14 @@ def main() -> None:
         names = list(HEADLINE + EXTRA)
     for name in names:
         try:
-            df = qs[name](spark, sf_dir)
-            plan = formatted_plan(df)
+            a = audit(qs[name](spark, sf_dir))
         except Exception as e:  # pragma: no cover - diagnostic path
             print(f"{name}: ERROR {e}")
             continue
         path = os.path.join(out_dir, f"{name}_{tag}.txt")
         with open(path, "w") as f:
-            f.write(plan)
-        print(f"{name}: {summarize(plan)}")
+            f.write(a.text)
+        print(f"{name}: {a.summary()}")
     spark.stop()
 
 

@@ -19,45 +19,17 @@ from dask_cudf_spark.registry import REGISTRY, _ensure_loaded
 
 PLAN_SF_DIR = "/root/testdata/sf0.001"
 
-_PY_ABBREV = {
-    "BatchEvalPython": "udf",
-    "ArrowEvalPython": "arrow-udf",
-    "FlatMapGroupsInPandas": "grouped-pd",
-    "MapInPandas": "map-pd",
-    "MapInArrow": "map-arrow",
-    "AggregateInPandas": "agg-pd",
-}
-
 
 def _plan_digest(spec, spark) -> str:
-    """One-line physical-plan fingerprint: shuffle/broadcast-exchange
-    counts, join strategies, Python boundaries, top-k.  Deterministic
-    for a fixed Spark version, so a changed digest in a COVERAGE.md
-    diff means the plan changed."""
+    """``PlanAudit.summary()`` of the query's plan.  Deterministic for a
+    fixed Spark version, so a changed digest in a COVERAGE.md diff means
+    the plan changed."""
     from dask_cudf_spark.plans.audit import audit
 
     try:
-        a = audit(spec.fn(spark, PLAN_SF_DIR))
+        return audit(spec.fn(spark, PLAN_SF_DIR)).summary()
     except Exception as e:  # pragma: no cover - surfaced in the doc
         return f"plan-error: {type(e).__name__}"
-    joins = []
-    for n, tag in [
-        (a.n_broadcast_hash_joins, "BHJ"),
-        (a.n_sort_merge_joins, "SMJ"),
-        (a.n_shuffled_hash_joins, "SHJ"),
-        (a.n_nested_loop_joins, "BNLJ"),
-        (a.n_cartesian, "CART"),
-    ]:
-        if n:
-            joins.append(f"{tag}x{n}")
-    parts = [f"sh={a.n_shuffles}", f"bx={a.n_broadcast_exchanges}"]
-    if joins:
-        parts.append("+".join(joins))
-    if a.python_nodes:
-        parts.append("py:" + ",".join(_PY_ABBREV[n] for n in a.python_nodes))
-    if a.has_take_ordered:
-        parts.append("topk")
-    return " ".join(parts)
 
 _FAMILY_SURVEY = {
     "scan": "§2.1 scans/sources/sinks",

@@ -128,7 +128,9 @@ sdf = (
     .drop("fp")
 )
 a = audit(sdf)
-n_scans = a.text.count("documents.parquet")
+n_scans = sum(
+    "documents.parquet" in meta.get("Location", "") for _, _, _, meta in a.nodes
+)
 
 summary = {
     "metric": "pipeline_bench",

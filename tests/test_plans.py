@@ -9,6 +9,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from dask_cudf_spark.plans import explain_str
 from dask_cudf_spark.registry import REGISTRY, _ensure_loaded
 from dask_cudf_spark.sources import load_table
 
@@ -18,8 +19,7 @@ _ensure_loaded()
 
 
 def plan(spark, name: str, mode: str = "formatted") -> str:
-    df = REGISTRY[name].fn(spark, SF_DIR)
-    return df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), mode)
+    return explain_str(REGISTRY[name].fn(spark, SF_DIR), mode)
 
 
 def test_scan_pushdown(spark):
@@ -53,10 +53,12 @@ def test_star_join_broadcasts_dims(spark):
 
 
 def test_partial_final_aggregate(spark):
-    p = plan(spark, "q_groupby_sum")
+    from dask_cudf_spark.plans import audit
+
+    a = audit(REGISTRY["q_groupby_sum"].fn(spark, SF_DIR))
     # two HashAggregate nodes (partial + final) around an exchange
-    assert p.count("HashAggregate") >= 2
-    assert "Exchange" in p
+    assert a.n_hash_aggregates >= 2
+    assert a.n_shuffles >= 1
 
 
 def test_topk_is_take_ordered(spark):
@@ -95,10 +97,7 @@ def test_facade_broadcast_hint(spark):
         {"c_custkey": "o_custkey"}
     )
     j = o.merge(c, on="o_custkey", broadcast=True)
-    p = j.spark._sc._jvm.PythonSQLUtils.explainString(
-        j.spark._jdf.queryExecution(), "formatted"
-    )
-    assert "BroadcastHashJoin" in p
+    assert "BroadcastHashJoin" in explain_str(j.spark)
 
 
 def test_cosine_corpus_not_shuffled(spark):
@@ -310,24 +309,19 @@ def test_pagerank_broadcast_posture(spark):
         "list is being re-exchanged per iteration\n" + a.text[:1500]
     )
     # every edges⋈rd join must build on the broadcast (rd) side: the
-    # simple-mode plan prints the build side inline ("BroadcastHashJoin
+    # join's description names the build side ("BroadcastHashJoin
     # [src...], [src...], Inner, BuildRight"); edges are the streamed
     # (left) input by construction, so BuildLeft on any src-keyed join
     # means the DATA-scale side was hashed into memory
-    from dask_cudf_spark.plans.audit import explain_str
-
-    simple = explain_str(
-        REGISTRY["q_pagerank_items"].fn(spark, SF_DIR), "simple"
-    )
     src_joins = [
-        ln
-        for ln in simple.splitlines()
-        if "BroadcastHashJoin [src" in ln
+        desc
+        for _, name, desc, _ in a.nodes
+        if name == "BroadcastHashJoin" and desc.startswith("BroadcastHashJoin [src")
     ]
-    assert src_joins, "no src-keyed broadcast joins found:\n" + simple[:1500]
-    for ln in src_joins:
-        assert "BuildRight" in ln, (
-            "pagerank item-join builds on the streamed side: " + ln
+    assert src_joins, "no src-keyed broadcast joins found:\n" + a.text[:1500]
+    for desc in src_joins:
+        assert "BuildRight" in desc, (
+            "pagerank item-join builds on the streamed side: " + desc
         )
 
 
@@ -396,9 +390,7 @@ def test_tpch_q5_region_pruned_below_fact_joins(spark):
     # ~4/5 of the fact shuffle volume would be discarded rows otherwise.
     # Disable auto-broadcast so the fact joins take their at-scale SMJ
     # form; the explicit dim broadcast hints must still hold.
-    import re
-
-    from dask_cudf_spark.plans import audit
+    from dask_cudf_spark.plans import audit, descendants
 
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
@@ -406,20 +398,21 @@ def test_tpch_q5_region_pruned_below_fact_joins(spark):
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
     assert a.n_sort_merge_joins >= 2  # c|x|o and o|x|li are fact joins now
-    # formatted-plan node ids are post-order: a child's id < its
-    # parent's.  The ASIA pre-filter is the (unique) BroadcastHashJoin
-    # keyed on c_nationkey; it must be a DESCENDANT of the first
-    # SortMergeJoin, i.e. carry a smaller node id.
-    bhj_cnation = [
-        int(m)
-        for m in re.findall(
-            r"\((\d+)\) BroadcastHashJoin[^\n]*\n(?:[^\n]*\n)?"
-            r"Left keys \[\d+\]: \[c_nationkey", a.text
+
+    def is_asia_prejoin(node) -> bool:
+        # the (unique) BroadcastHashJoin keyed on c_nationkey
+        _, name, desc, _ = node
+        return name == "BroadcastHashJoin" and desc.startswith(
+            "BroadcastHashJoin [c_nationkey"
         )
-    ]
-    smj = [int(m) for m in re.findall(r"\((\d+)\) SortMergeJoin", a.text)]
-    assert bhj_cnation, "customer must pre-join the broadcast ASIA nation set"
-    assert min(bhj_cnation) < min(smj), (
+
+    assert any(map(is_asia_prejoin, a.nodes)), (
+        "customer must pre-join the broadcast ASIA nation set"
+    )
+    first_smj = next(
+        i for i, (_, name, _, _) in enumerate(a.nodes) if name == "SortMergeJoin"
+    )
+    assert any(map(is_asia_prejoin, descendants(a.nodes, first_smj))), (
         "region restriction lands ABOVE the fact joins", a.text[:2000]
     )
 
@@ -490,7 +483,8 @@ def test_group_head_prunes_before_output(spark):
     # Spark 4 plans a PARTIAL WindowGroupLimit below the exchange: each
     # map task keeps only its local top-3 per group BEFORE shuffling —
     # the property that bounds shuffle bytes by 3x|groups| at 100 TB
-    assert a.text.count("WindowGroupLimit") >= 2, a.text[:500]
+    limits = [name for _, name, _, _ in a.nodes if name == "WindowGroupLimit"]
+    assert len(limits) >= 2, a.text[:500]
 
 
 def test_tfidf_broadcasts_vocab_side(spark):
@@ -598,15 +592,15 @@ def test_tpch_q11_reuses_fact_exchange_at_runtime(spark):
     # the STATIC plan prints the lineitem subtree twice, but AQE's
     # exchange reuse collapses it — the executed plan must contain a
     # ReusedExchange so the fact is scanned/shuffled once per run
-    from dask_cudf_spark.plans import audit, explain_str
+    from dask_cudf_spark.plans import audit, plan_nodes
 
     df = REGISTRY["q_tpch_q11"].fn(spark, SF_DIR)
     a = audit(df)
     assert a.n_cartesian == 0 and not a.python_nodes
     df.collect()
-    executed = explain_str(df, "simple")
-    assert "isFinalPlan=true" in executed
-    assert "ReusedExchange" in executed, executed
+    executed = plan_nodes(df)
+    assert executed[0][2] == "AdaptiveSparkPlan isFinalPlan=true"
+    assert any(name == "ReusedExchange" for _, name, _, _ in executed), executed
 
 
 def test_tpch_q21_stays_on_orderkey_partitioning(spark):
@@ -802,98 +796,71 @@ def test_grouping_sets_one_expand_one_shuffle(spark):
         assert p.count("Scan parquet") == 1, name
 
 
-def test_plan_digest_invariant_to_metadata_truncation():
-    """bench._plan_digest must not change when FileScan metadata prose
-    (DataFilters/Location/ReadSchema) is truncated at a different
-    column — Spark cuts those strings at maxMetadataStringLength, and
-    the cut point shifts with the run's expression-id lengths.  This
-    exact artifact was recorded as a ppjoin 'plan flip' in rounds
-    10-11 (r12 bisect: 4 digests, identical plans)."""
-    import sys
+def test_plan_digest_invariant_to_metadata_truncation(spark):
+    """Spark cuts a scan's description at
+    spark.sql.maxMetadataStringLength, at a point that moves with the
+    width of the run's expression ids — once recorded as a ppjoin 'plan
+    flip' across identical plans.  The digest reads the scan's
+    unabbreviated metadata instead, so the cut point cannot move it."""
+    from dask_cudf_spark.plans import plan_digest, plan_nodes
 
-    sys.path.insert(0, "/root/repo")
-    from bench import _plan_digest
+    key = "spark.sql.maxMetadataStringLength"
+    saved = spark.conf.get(key)
+    digests, descs = [], []
+    try:
+        for length in ("20", "100"):
+            spark.conf.set(key, length)
+            nodes = plan_nodes(REGISTRY["q_join_broadcast"].fn(spark, SF_DIR))
+            digests.append(plan_digest(nodes))
+            descs.append([d for _, _, d, m in nodes if m])
+    finally:
+        spark.conf.set(key, saved)
+    assert descs[0] != descs[1]  # the truncation really differed
+    assert digests[0] == digests[1]
 
-    class FakeDF:
-        def __init__(self, text):
-            self._text = text
-            self._jdf = self
 
-        def queryExecution(self):
-            return self
+def test_plan_digest_flips_on_broadcast_to_smj(spark):
+    from dask_cudf_spark.plans import plan_digest, plan_nodes
 
-        def executedPlan(self):
-            return self
+    def nodes():
+        return plan_nodes(REGISTRY["q_join_inner"].fn(spark, SF_DIR))
 
-        def toString(self):
-            return self._text
+    bhj = nodes()
+    keys = (
+        "spark.sql.autoBroadcastJoinThreshold",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold",
+    )
+    saved = {k: spark.conf.get(k, None) for k in keys}
+    try:
+        for k in keys:
+            spark.conf.set(k, "-1")
+        smj = nodes()
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+    assert any(n == "BroadcastHashJoin" for _, n, _, _ in bhj)
+    assert not any(n == "BroadcastHashJoin" for _, n, _, _ in smj)
+    assert any(n == "SortMergeJoin" for _, n, _, _ in smj)
+    assert plan_digest(bhj) != plan_digest(smj)
 
-    base = (
-        "*(24) BroadcastHashJoin [id_b#221L], [id_b#225L], Inner\n"
-        "+- FileScan parquet [doc_id#139L,text#140] Batched: true, "
-        "DataFilters: [isnotnull(doc_id#139L), (size(split(text#140"
-    )
-    # same plan, longer expression ids upstream -> earlier truncation
-    other = (
-        "*(24) BroadcastHashJoin [id_b#12210L], [id_b#12250L], Inner\n"
-        "+- FileScan parquet [doc_id#13900L,text#14000] Batched: true, "
-        "DataFilters: [isnotnull(doc_id#13900L), (siz"
-    )
-    assert _plan_digest(FakeDF(base)) == _plan_digest(FakeDF(other))
-    # a REAL strategy change must still flip the digest
-    smj = base.replace("BroadcastHashJoin", "SortMergeJoin")
-    assert _plan_digest(FakeDF(base)) != _plan_digest(FakeDF(smj))
-    # and column-pruning changes (different read schema) must flip it
-    pruned = base.replace("[doc_id#139L,text#140]", "[doc_id#139L]")
-    assert _plan_digest(FakeDF(base)) != _plan_digest(FakeDF(pruned))
-    # catalog-qualified scans (bucketed join path) truncate the same
-    # way — "FileScan parquet spark_catalog.default.tbl[cols]" must
-    # normalize too (this was the q_join_bucketed 3-digest flip the
-    # r12 plan_flips detector caught on its first run)
-    cat_a = (
-        "SortMergeJoin [c_custkey#14L], [c_custkey#16L], Inner\n"
-        "+- FileScan parquet spark_catalog.default.bucketed_orders"
-        "[c_custkey#14L,o_totalprice#15] Batched: true, DataFilters: "
-        "[isnotnull(c_custkey#14L), (size(spl"
-    )
-    cat_b = (
-        "SortMergeJoin [c_custkey#1400L], [c_custkey#1600L], Inner\n"
-        "+- FileScan parquet spark_catalog.default.bucketed_orders"
-        "[c_custkey#1400L,o_totalprice#1500] Batched: true, DataFilters: "
-        "[isnotnull(c_custkey#1400L), ("
-    )
-    assert _plan_digest(FakeDF(cat_a)) == _plan_digest(FakeDF(cat_b))
-    # r12 ADVICE item 3: the normalizer must NOT be blind to a lost
-    # filter pushdown — PushedFilters (which carry no expression ids)
-    # are retained as a normalized token, so a scan that stops pushing
-    # its predicate flips the digest even though the metadata tail is
-    # otherwise stripped.
-    with_pf = (
-        "*(2) Filter (l_quantity#3 > 10.0)\n"
-        "+- FileScan parquet [l_quantity#3,l_shipdate#4] Batched: true, "
-        "DataFilters: [isnotnull(l_quantity#3)], Format: Parquet, "
-        "PushedFilters: [IsNotNull(l_quantity), "
-        "GreaterThan(l_quantity,10.0)], ReadSchema: struct<l_quantity"
-    )
-    lost_pf = (
-        "*(2) Filter (l_quantity#3 > 10.0)\n"
-        "+- FileScan parquet [l_quantity#3,l_shipdate#4] Batched: true, "
-        "DataFilters: [isnotnull(l_quantity#3)], Format: Parquet, "
-        "PushedFilters: [], ReadSchema: struct<l_quantity"
-    )
-    assert _plan_digest(FakeDF(with_pf)) != _plan_digest(FakeDF(lost_pf))
-    # same PushedFilters with different expression-id widths upstream
-    # (digit stripping) and a '...'-abbreviated trailing token (dropped)
-    # must digest identically — truncation drift stays invisible
-    pf_trunc_a = with_pf.replace(
-        "GreaterThan(l_quantity,10.0)], ReadSchema",
-        "GreaterThan(l_quantity,10.0), LessThan(l_ship...", 1,
-    )
-    pf_trunc_b = with_pf.replace(
-        "GreaterThan(l_quantity,10.0)], ReadSchema",
-        "GreaterThan(l_quantity,10.0), LessTha...", 1,
-    )
-    assert _plan_digest(FakeDF(pf_trunc_a)) == _plan_digest(FakeDF(pf_trunc_b))
+
+def test_plan_digest_sees_lost_pushed_filter(spark):
+    """Two plans that differ only in a scan's PushedFilters (a lost
+    filter pushdown) or ReadSchema (lost column pruning) must digest
+    differently."""
+    from dask_cudf_spark.plans import plan_digest, plan_nodes
+
+    nodes = plan_nodes(REGISTRY["q_scan_parquet"].fn(spark, SF_DIR))
+    (i,) = [i for i, (_, _, _, m) in enumerate(nodes) if m]
+    depth, name, desc, meta = nodes[i]
+    assert meta["PushedFilters"] != "[]"
+    for key, value in [("PushedFilters", "[]"), ("ReadSchema", "struct<>")]:
+        changed = list(nodes)
+        changed[i] = (depth, name, desc, {**meta, key: value})
+        assert plan_digest(nodes) != plan_digest(changed), key
 
 
 def test_fk_integrity_audit_shuffle_budget(spark):
@@ -909,10 +876,11 @@ def test_fk_integrity_audit_shuffle_budget(spark):
     # in text`) was near-vacuous — Spark prints 1-row count cross-joins
     # AS BNLJ, satisfying the second arm by construction.  Bound them
     # instead: NO CartesianProduct ever, and at most the three 1-row
-    # count cross-joins (formatted explain prints each node twice:
-    # tree + details, so <= 6 BNLJ mentions).
+    # count cross-joins.
     assert a.n_cartesian == 0
-    assert a.n_nested_loop_joins <= 6
-    # exactly the two dangling-FK anti joins (formatted explain prints
-    # each node in tree + details, so 2 joins appear 4 times)
-    assert a.text.count("LeftAnti") in (2, 4)
+    assert a.n_nested_loop_joins <= 3
+    # exactly the two dangling-FK anti joins
+    anti = [
+        desc for _, name, desc, _ in a.nodes if "Join" in name and "LeftAnti" in desc
+    ]
+    assert len(anti) == 2, anti

@@ -15,6 +15,7 @@ from dask_cudf_spark.operators.ranking import (
     global_ntile,
     global_row_number,
 )
+from dask_cudf_spark.plans import descendants, plan_nodes
 
 
 def _same(a, b) -> bool:
@@ -154,31 +155,22 @@ def test_plan_has_no_full_data_single_partition(spark, frame):
     lineage."""
     got = global_row_number(frame, [F.asc("v"), F.asc("k")], out="rank")
     got.collect()
-    plan = got._jdf.queryExecution().executedPlan().toString()
-    # AQE's toString echoes the pre-adaptive plan after the final one;
-    # assert on the FINAL section only
-    plan = plan.split("== Initial Plan ==")[0]
-    assert "Scan ExistingRDD" not in plan
-    assert "rangepartitioning" not in plan
+    nodes = plan_nodes(got)  # the AQE-final plan
+    descs = [desc for _, _, desc, _ in nodes]
+    assert not any("Scan ExistingRDD" in d for d in descs)
+    assert not any("rangepartitioning" in d for d in descs)
     # the data-bearing window is partition-keyed on __pid, fed by a
     # __pid hash exchange
-    assert "windowspecdefinition(__pid" in plan
-    assert "hashpartitioning(__pid" in plan
-    lines = plan.splitlines()
-    single = [i for i, ln in enumerate(lines) if "SinglePartition" in ln]
+    assert any("windowspecdefinition(__pid" in d for d in descs)
+    assert any("hashpartitioning(__pid" in d for d in descs)
+    single = [i for i, d in enumerate(descs) if "SinglePartition" in d]
     assert len(single) == 1
-
-    def depth(ln: str) -> int:
-        return len(ln) - len(ln.lstrip(" :+-"))
-
-    # walk up the tree from that exchange: a BroadcastExchange must
-    # sit above it
-    ancestors, d = [], depth(lines[single[0]])
-    for ln in reversed(lines[: single[0]]):
-        if depth(ln) < d:
-            ancestors.append(ln)
-            d = depth(ln)
-    assert any("BroadcastExchange" in a for a in ancestors), plan
+    # a BroadcastExchange must sit above that exchange
+    j = single[0]
+    assert any(
+        name == "BroadcastExchange" and i < j <= i + len(descendants(nodes, i))
+        for i, (_, name, _, _) in enumerate(nodes)
+    ), descs
 
 
 def test_global_cumsum_matches_window(spark, frame):

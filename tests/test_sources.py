@@ -233,9 +233,9 @@ def test_read_binary_files(spark, tmp_path):
 
     # the length filter must prune via the source's metadata column,
     # not after materializing content
-    plan = small._sc._jvm.PythonSQLUtils.explainString(
-        small._jdf.queryExecution(), "formatted"
-    )
+    from dask_cudf_spark.plans import explain_str
+
+    plan = explain_str(small)
     assert "binaryFile" in plan or "BinaryFile" in plan
 
 
