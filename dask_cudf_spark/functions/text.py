@@ -1,8 +1,8 @@
 """Text-analysis column functions (SURVEY.md §2.8 nvtext family, §2.12).
 
 Everything here is a *pure Column expression* (JVM-side) except
-:func:`minhash_signature_np`, the Arrow-vectorized signature variant
-(numpy pandas_udf) that the dedup operator uses by default — Catalyst
+:func:`minhash_signature_md5_np`, the Arrow-vectorized signature twin
+(numpy pandas_udf) that the fuzzy-dedup operator uses — Catalyst
 higher-order functions are interpreted, so for the heaviest per-row
 kernel the columnar-batch path wins, exactly the trade cuDF makes with
 GPU kernels.  These are the building blocks the LLM-pipeline operators
@@ -119,36 +119,6 @@ def char_ngrams(col: Column | str, n: int = 5) -> Column:
 _MERSENNE_P = (1 << 31) - 1  # permutation modulus (fits all arithmetic in long)
 
 
-def minhash_band_buckets(
-    col: Column | str, bands: int = 4, rows_per_band: int = 4, shingle: int = 5
-) -> Column:
-    """LSH band buckets directly: array<long> of `bands` bucket hashes.
-
-    The whole computation is ONE expression with the signature fold as
-    the direct input of the final transform, so the fold is evaluated
-    exactly once per row.  (Referencing a signature column k times lets
-    CollapseProject inline k copies — measured 4-16x slower; HOFs get no
-    codegen subexpression elimination.)
-
-    Accumulator shape: array<array<long>> = bands x rows_per_band mins;
-    final step hashes each band's slice (xxhash64 over array<long>).
-    """
-    sig = minhash_signature(col, num_hashes=bands * rows_per_band, shingle=shingle)
-    # let-binding trick: wrap the signature in a 1-element array and bind
-    # it as a lambda variable -> the `s` references inside are variable
-    # reads, and the expensive fold runs exactly once per row.
-    return F.element_at(
-        F.transform(
-            F.array(sig),
-            lambda s: F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda b: F.xxhash64(F.slice(s, b * rows_per_band + 1, rows_per_band)),
-            ),
-        ),
-        1,
-    )
-
-
 def _minhash_perm_constants(num_hashes: int, seed: int = 42) -> list[tuple[int, int]]:
     import random
 
@@ -259,9 +229,10 @@ def simhash64(col: Column | str, shingle: int = 4) -> Column:
 # compute bit-identically (Spark conv(substr(md5(x),1,15),16,10),
 # DuckDB CAST('0x'||substr(md5(x),1,15) AS BIGINT)).  The SQL
 # generators emit DuckDB expressions from the SAME permutation
-# constants, the q_ann_lsh literal-replay pattern.  md5 is ~5x slower
-# than xxhash64, so the production dedup path stays on xxhash; these
-# twins exist to hash-verify the LSH pipeline end-to-end.
+# constants, the q_ann_lsh literal-replay pattern.  The fuzzy-dedup
+# operator (operators/dedup.near_dedup_minhash_sig) runs on these
+# twins, through the Arrow-vectorized minhash_signature_md5_np, so its
+# LSH pipeline is hash-verified end to end.
 
 
 def md5_long(col: Column | str) -> Column:
@@ -473,55 +444,6 @@ def doc_fingerprint(col: Column | str, normalize: bool = True) -> Column:
     return F.md5(s)
 
 
-def minhash_signature_np(
-    col: Column | str, num_hashes: int = 16, shingle: int = 5
-) -> Column:
-    """Arrow-vectorized minhash signature (numpy inside a pandas_udf).
-
-    Same construction as :func:`minhash_signature` (distinct character
-    shingles -> base hash -> k affine permutations mod 2^31-1 -> min per
-    permutation) with a polynomial shingle hash instead of xxhash64 so
-    the whole batch vectorizes in numpy.  Signatures therefore differ
-    from the SQL variant in VALUE but not in distribution/semantics —
-    minhash collision probability still equals shingle-set Jaccard.
-
-    Why this exists: Catalyst higher-order functions are interpreted
-    (no codegen), so the SQL fold is allocation-heavy and JIT-sensitive;
-    the Arrow path moves columnar batches once per partition and does
-    O(shingles x k) SIMD work — the same trade cuDF makes with GPU
-    kernels (upstream nvtext minhash, cpp/src/text/minhashes.cu).
-    """
-    import numpy as np
-    from pyspark.sql.types import ArrayType, LongType
-
-    consts = _minhash_perm_constants(num_hashes)
-    a_vec = [a for a, _ in consts]
-    b_vec = [b for _, b in consts]
-    p = _MERSENNE_P
-
-    @F.pandas_udf(ArrayType(LongType()))
-    def _mh(texts: pd.Series) -> pd.Series:
-        A = np.array(a_vec, dtype=np.int64)
-        B = np.array(b_vec, dtype=np.int64)
-        pows = np.array([31**j for j in range(shingle)][::-1], dtype=np.int64)
-        out = []
-        for t in texts:
-            b = np.frombuffer(t.encode("utf-8"), dtype=np.uint8).astype(np.int64)
-            n = b.size - (shingle - 1)
-            if n <= 0:
-                out.append([p] * len(a_vec))
-                continue
-            sh = np.zeros(n, dtype=np.int64)
-            for j in range(shingle):
-                sh += b[j : j + n] * pows[j]  # < 31^shingle * 256: no overflow
-            sh = np.unique(sh) % p
-            mins = ((sh[:, None] * A[None, :] + B[None, :]) % p).min(axis=0)
-            out.append(mins.tolist())
-        return pd.Series(out)
-
-    return _mh(_c(col))
-
-
 def minhash_signature_md5_np(
     col: Column | str, num_hashes: int = 16, shingle: int = 5
 ) -> Column:
@@ -577,15 +499,3 @@ def minhash_signature_md5_np(
         return pd.Series(out)
 
     return _mh(_c(col))
-
-
-def band_buckets_from_sig(
-    sig: Column, bands: int, rows_per_band: int
-) -> Column:
-    """LSH band bucket hashes (array<long>, one per band) from a
-    precomputed signature column — native expression, works with either
-    signature implementation."""
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(bands - 1)),
-        lambda b: F.xxhash64(F.slice(sig, b * rows_per_band + 1, rows_per_band)),
-    )

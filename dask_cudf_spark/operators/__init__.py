@@ -7,9 +7,8 @@ from .asof import merge_asof
 from .dedup import (
     connected_components,
     exact_dedup,
-    minhash_lsh_candidates,
-    near_dedup_minhash,
-    token_jaccard,
+    minhash_sig_pairs,
+    near_dedup_minhash_sig,
 )
 from .multimodal import (
     attach_payload,
@@ -31,9 +30,8 @@ from .skew import (
 __all__ = [
     "merge_asof",
     "exact_dedup",
-    "minhash_lsh_candidates",
-    "near_dedup_minhash",
-    "token_jaccard",
+    "minhash_sig_pairs",
+    "near_dedup_minhash_sig",
     "connected_components",
     "attach_payload",
     "sample_frames",

@@ -4,14 +4,17 @@ pattern re-expressed Spark-first).
 Pipeline shapes, all shuffle-bounded:
 - exact_dedup: hash -> groupBy(hash) -> keep min id.  One shuffle on the
   digest (uniformly distributed -> no skew).
-- minhash LSH: signature (embarrassingly parallel, no shuffle)
-  -> band -> explode bands -> groupBy(band_hash) bucket join (one shuffle
-  on band hash) -> candidate pairs -> exact-jaccard verification.
+- fuzzy dedup (near_dedup_minhash_sig, the one MinHash pipeline):
+  md5-exact signature (embarrassingly parallel, no shuffle) -> band ->
+  explode bands -> groupBy(band, key) buckets (one shuffle) ->
+  in-bucket candidate pairs scored by signature agreement (the verify
+  step) -> connected components -> min-id survivor per cluster.  Every
+  stage has a DuckDB twin (q_minhash_dedup's oracle).
   At 100 TB: band buckets with huge identical-band groups are the skew
   risk; buckets beyond cap_bucket follow an EXPLICIT on_oversize policy
-  (star pairs / fail-fast / truncate — see _bucket_pairs and
-  minhash_sig_pairs) so a degenerate bucket can't produce O(n^2) pairs
-  and never silently drops coverage either.
+  (star pairs / fail-fast — see minhash_sig_pairs) so a degenerate
+  bucket can't produce O(n^2) pairs and never silently drops coverage
+  either.
 """
 
 from __future__ import annotations
@@ -19,71 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.text import (
-    band_buckets_from_sig,
-    doc_fingerprint,
-    minhash_band_buckets,
-    minhash_signature_md5_np,
-    minhash_signature_np,
-    tokenize,
-)
+from ..functions.text import doc_fingerprint, minhash_signature_md5_np
 from ..sources.tables import scale_out
-
-
-def _bucket_pairs(ids_col: str, cap_bucket: int, on_oversize: str):
-    """Column expression exploding a sorted in-bucket id array into
-    candidate-pair structs (id_a, id_b), id_a < id_b — no self-join.
-
-    Buckets of <= ``cap_bucket`` ids emit all n*(n-1)/2 pairs.  Larger
-    (degenerate) buckets follow ``on_oversize`` — NEVER a silent tail
-    drop (round-4 ADVICE: real corpora have >10k identical-boilerplate
-    docs per band key, and slicing under-deduplicated them silently):
-
-    - ``'star'``: pair the bucket's min id with every other id — O(n)
-      pairs covering every member; downstream verification plus
-      single-link components recover the full cluster whenever members
-      agree with the min (identical-boilerplate buckets do).
-    - ``'error'``: raise_error() inside the plan with the bucket size,
-      failing the job loudly so the cap can be raised deliberately.
-    - ``'truncate'``: the historical slice() behavior (measurement
-      only).
-
-    CaseWhen evaluates only the taken branch per row, so the O(n^2)
-    all-pairs expression never runs on an oversized bucket.
-    """
-    if on_oversize not in ("star", "error", "truncate"):
-        raise ValueError(f"on_oversize must be star|error|truncate, got {on_oversize!r}")
-    ids = F.col(ids_col)
-    oversize = F.size(ids) > cap_bucket
-
-    def all_pairs(arr):
-        return F.flatten(
-            F.transform(
-                arr,
-                lambda x, i: F.transform(
-                    F.slice(arr, i + 2, F.size(arr)),
-                    lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
-                ),
-            )
-        )
-
-    if on_oversize == "truncate":
-        return F.explode(
-            all_pairs(F.when(oversize, F.slice(ids, 1, cap_bucket)).otherwise(ids))
-        )
-    if on_oversize == "star":
-        star = F.transform(
-            F.slice(ids, 2, F.size(ids)),
-            lambda y: F.struct(
-                F.element_at(ids, 1).alias("id_a"), y.alias("id_b")
-            ),
-        )
-        return F.explode(F.when(oversize, star).otherwise(all_pairs(ids)))
-    msg = F.concat(
-        F.lit(f"minhash LSH bucket exceeds cap_bucket={cap_bucket}: size="),
-        F.size(ids).cast("string"),
-    )
-    return F.explode(F.when(oversize, F.raise_error(msg)).otherwise(all_pairs(ids)))
 
 
 def exact_dedup(
@@ -101,93 +41,6 @@ def exact_dedup(
         .filter(F.col("__rn") == 1)
         .drop("__fp", "__rn")
     )
-
-
-def minhash_lsh_candidates(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 16,
-    bands: int = 4,
-    shingle: int = 5,
-    cap_bucket: int = 1000,
-    distinct: bool = True,
-    impl: str = "vectorized",
-    on_oversize: str = "star",
-) -> DataFrame:
-    """Candidate near-duplicate pairs via MinHash + LSH banding.
-
-    Returns (id_a, id_b) with id_a < id_b, distinct.  Two docs become a
-    candidate iff they agree on ALL hashes of >=1 band — standard
-    (bands x rows-per-band) S-curve tuning.
-
-    ``distinct=False`` skips the final dedup shuffle: pairs sharing >1
-    band repeat (measured ~1% on the test corpus).  Use it when the
-    consumer re-aggregates anyway (near_dedup_minhash does).
-
-    ``impl``: 'vectorized' (default) computes signatures in an
-    Arrow-batched numpy pandas_udf — fastest and timing-stable;
-    'sql' keeps the whole pipeline JVM-side in pure expressions
-    (no Python workers needed) at higher interpreted-HOF cost.
-    Candidate SETS differ slightly between impls (different shingle
-    hash function); dedup semantics are identical.
-    """
-    assert num_hashes % bands == 0
-    rows_per_band = num_hashes // bands
-    # signature evaluation is compute-bound -> never run on one input split
-    df = scale_out(df)
-    if impl == "vectorized":
-        # materialize the UDF output as a column first: a Python UDF may
-        # not appear inside a higher-order-function lambda
-        sig_df = df.select(
-            F.col(id_col).alias("__id"),
-            minhash_signature_np(
-                text_col, num_hashes=num_hashes, shingle=shingle
-            ).alias("__sig"),
-        )
-        banded = sig_df.select(
-            "__id",
-            F.posexplode(
-                band_buckets_from_sig(F.col("__sig"), bands, rows_per_band)
-            ).alias("band", "bucket"),
-        )
-    else:
-        # one self-contained expression -> the signature fold runs
-        # exactly once per row (see functions/text.py)
-        banded = df.select(
-            F.col(id_col).alias("__id"),
-            F.posexplode(
-                minhash_band_buckets(
-                    text_col,
-                    bands=bands,
-                    rows_per_band=rows_per_band,
-                    shingle=shingle,
-                )
-            ).alias("band", "bucket"),
-        )
-
-    # Pair generation inside each bucket via collect_list + nested
-    # transform: ONE shuffle (the groupBy), no self-join (a self-join
-    # would recompute the whole signature pipeline for both sides).
-    # _bucket_pairs caps pathological buckets (skew guard) under the
-    # explicit on_oversize policy — a degenerate bucket contributes
-    # O(n) star pairs (default) or fails loudly, never O(n^2).
-    buckets = banded.groupBy("band", "bucket").agg(
-        F.array_sort(F.collect_list("__id")).alias("ids")
-    )
-    # pair generation is compute-bound but its INPUT bytes are tiny, so
-    # AQE coalesces the post-agg stage to one partition (measured: the
-    # whole pair explode ran on 1 of 32 cores).  An explicit repartition
-    # is exempt from AQE coalescing and keeps the quadratic-per-bucket
-    # work spread across the cluster; the extra exchange moves only the
-    # (band, bucket, ids) aggregates.
-    buckets = scale_out(buckets)
-    pairs = (
-        buckets.filter(F.size("ids") > 1)
-        .select(_bucket_pairs("ids", cap_bucket, on_oversize).alias("p"))
-        .select(F.col("p.id_a").alias("id_a"), F.col("p.id_b").alias("id_b"))
-    )
-    return pairs.distinct() if distinct else pairs
 
 
 def minhash_md5_banded(
@@ -274,17 +127,13 @@ def minhash_sig_pairs(
       the cluster exactly when members verify against the min (oversize
       buckets are identical-boilerplate in practice, so they do);
       ``'error'`` raise_error()s inside the plan with the offending
-      size so a 100 TB job fails loudly instead of under-deduplicating;
-      ``'truncate'`` is the old slice behavior, kept only for
-      measurement.
+      size so a 100 TB job fails loudly instead of under-deduplicating.
     - ``distinct=False`` skips the pair-dedup shuffle: docs agreeing on
       >1 band repeat (~1%), harmless when the consumer re-aggregates
       (connected components' min-aggs do).
     """
-    if on_oversize not in ("star", "error", "truncate"):
-        raise ValueError(
-            f"on_oversize must be star|error|truncate, got {on_oversize!r}"
-        )
+    if on_oversize not in ("star", "error"):
+        raise ValueError(f"on_oversize must be star|error, got {on_oversize!r}")
     banded = minhash_md5_banded(
         df, text_col, id_col, num_hashes=num_hashes, bands=bands, shingle=shingle
     )
@@ -296,46 +145,31 @@ def minhash_sig_pairs(
         .filter(F.size("items") > 1)
     )
     n = F.size("items")
-
-    def idx_pairs(last):
-        # all (i, j), 0 <= i < j <= last — indices, not data: the
-        # O(n^2) blowup carries two ints per pair, never sliced struct
-        # arrays.  Guarded for last < 1: F.sequence(0, -1) would emit a
-        # DESCENDING [0, -1] (self-pairs + element_at(_, 0) errors), so
-        # degenerate caps yield an empty pair set like the old slice
-        # path did.
-        pairs = F.flatten(
-            F.transform(
-                F.sequence(F.lit(0), last - F.lit(1)),
-                lambda i: F.transform(
-                    F.sequence(i + 1, last),
-                    lambda j: F.struct(i.alias("i"), j.alias("j")),
-                ),
-            )
+    last = n - F.lit(1)  # >= 1: every bucket has at least two members
+    # all (i, j), 0 <= i < j <= last — indices, not data: the O(n^2)
+    # blowup carries two ints per pair, never sliced struct arrays
+    all_pairs = F.flatten(
+        F.transform(
+            F.sequence(F.lit(0), last - F.lit(1)),
+            lambda i: F.transform(
+                F.sequence(i + 1, last),
+                lambda j: F.struct(i.alias("i"), j.alias("j")),
+            ),
         )
-        empty = F.array().cast("array<struct<i:int,j:int>>")
-        return F.when(last >= 1, pairs).otherwise(empty)
-
-    if on_oversize == "truncate":
-        ij = idx_pairs(F.least(n, F.lit(cap_bucket)) - F.lit(1))
-    else:
-        oversize = n > cap_bucket
+    )
+    oversize = n > cap_bucket
+    if on_oversize == "star":
         star = F.transform(
-            F.sequence(F.lit(1), n - F.lit(1)),
+            F.sequence(F.lit(1), last),
             lambda j: F.struct(F.lit(0).alias("i"), j.alias("j")),
         )
-        if on_oversize == "star":
-            ij = F.when(oversize, star).otherwise(idx_pairs(n - F.lit(1)))
-        else:
-            msg = F.concat(
-                F.lit(
-                    f"minhash LSH bucket exceeds cap_bucket={cap_bucket}: size="
-                ),
-                n.cast("string"),
-            )
-            ij = F.when(oversize, F.raise_error(msg)).otherwise(
-                idx_pairs(n - F.lit(1))
-            )
+        ij = F.when(oversize, star).otherwise(all_pairs)
+    else:
+        msg = F.concat(
+            F.lit(f"minhash LSH bucket exceeds cap_bucket={cap_bucket}: size="),
+            n.cast("string"),
+        )
+        ij = F.when(oversize, F.raise_error(msg)).otherwise(all_pairs)
     ex = buckets.select("items", F.explode(ij).alias("ij"))
     a = F.element_at("items", F.col("ij.i") + 1)
     b = F.element_at("items", F.col("ij.j") + 1)
@@ -363,9 +197,11 @@ def near_dedup_minhash_sig(
     signature-agreement verify (n_match/k >= threshold) -> connected
     components -> drop everything but each cluster's min-id survivor.
 
-    This is the production single-link semantics (clusters, not one
-    hop); every stage has a DuckDB twin (recursive CTE for the closure),
-    unlike the xxhash throughput variant ``near_dedup_minhash``.
+    This is the engine's one fuzzy-dedup pipeline, with production
+    single-link semantics (clusters, not one hop); every stage has a
+    DuckDB twin (recursive CTE for the closure — q_minhash_dedup's
+    oracle), and examples/curation_pipeline.py runs it with the same
+    constants.
     """
     pairs = minhash_sig_pairs(
         df,
@@ -384,88 +220,6 @@ def near_dedup_minhash_sig(
         F.col("node").alias(id_col)
     )
     return df.join(to_drop, on=id_col, how="left_anti")
-
-
-def token_jaccard(df_pairs: DataFrame, text_a: str, text_b: str) -> DataFrame:
-    """Exact token-set Jaccard for candidate pairs (the verify step)."""
-    ta = F.array_distinct(tokenize(text_a))
-    tb = F.array_distinct(tokenize(text_b))
-    inter = F.size(F.array_intersect(ta, tb)).cast("double")
-    union = F.size(F.array_union(ta, tb)).cast("double")
-    return df_pairs.withColumn("jaccard", inter / union)
-
-
-def near_dedup_minhash(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    threshold: float = 0.8,
-    num_hashes: int = 16,
-    bands: int = 4,
-    shingle: int = 5,
-    impl: str = "vectorized",
-    clusters: bool = False,
-) -> DataFrame:
-    """Full fuzzy-dedup: LSH candidates -> exact-jaccard verify ->
-    connected docs collapse to the min id.
-
-    ``clusters=False`` (default): one-hop min-id propagation — chains
-    beyond one hop are rare at high thresholds (documented
-    approximation).  ``clusters=True``: full connected components over
-    the verified-pair graph (operators/dedup.connected_components), the
-    exact single-link semantics production pipelines use."""
-    # duplicate candidate pairs (docs agreeing on >1 band) are harmless
-    # here — the min-id groupBy re-aggregates — so skip their dedup
-    # shuffle and spend ~1% extra verify work instead
-    cands = minhash_lsh_candidates(
-        df,
-        text_col,
-        id_col,
-        num_hashes=num_hashes,
-        bands=bands,
-        shingle=shingle,
-        distinct=False,
-        impl=impl,
-    )
-    # tokenize ONCE per doc before the pair join (the projection stays
-    # below the join in the plan), not once per candidate pair; plain
-    # split (codegen) instead of the HOF tokenize (interpreted) — the
-    # corpus is single-space separated, so the empty-token filter is
-    # redundant here
-    toks = df.select(
-        F.col(id_col).alias("__id"),
-        F.array_distinct(F.split(text_col, " ")).alias("__toks"),
-    )
-    pairs = (
-        cands.join(
-            toks.select(F.col("__id").alias("id_a"), F.col("__toks").alias("toks_a")),
-            on="id_a",
-        )
-        .join(
-            toks.select(F.col("__id").alias("id_b"), F.col("__toks").alias("toks_b")),
-            on="id_b",
-        )
-    )
-    inter = F.size(F.array_intersect("toks_a", "toks_b")).cast("double")
-    union = F.size(F.array_union("toks_a", "toks_b")).cast("double")
-    verified = pairs.withColumn("jaccard", inter / union).filter(
-        F.col("jaccard") >= threshold
-    )
-    if clusters:
-        # production shape: collapse each connected CLUSTER of verified
-        # pairs to its min-id representative (full transitive closure,
-        # not one hop) — survivors = nodes that are their own component
-        comp = connected_components(verified.select("id_a", "id_b"))
-        to_drop = comp.filter(F.col("node") != F.col("component")).select(
-            F.col("node").alias(id_col)
-        )
-        return df.join(to_drop, on=id_col, how="left_anti")
-    # one-hop: every verified dup (id_b side) maps to the smallest
-    # matching id_a
-    to_drop = verified.groupBy("id_b").agg(F.min("id_a").alias("keep_id"))
-    return df.join(
-        to_drop.select(F.col("id_b").alias(id_col)), on=id_col, how="left_anti"
-    )
 
 
 #: one-slot retirement registry for connected_components' caches (the

@@ -1,8 +1,8 @@
 """Similarity search over embedding columns (SURVEY.md §2.12).
 
 - cosine_topk: exact brute-force top-k — the correctness baseline.
-  Query side must be small (broadcast); corpus side streams.  Dot
-  products are pure SQL lambdas (zip_with + aggregate), JVM-side.
+  Query side must be small (collected to the driver); corpus side
+  streams through one Arrow-batched matmul per batch.
 - lsh_bucket_topk: random-hyperplane LSH (SimHash for vectors) — the
   scale path: candidates only within matching buckets, then exact
   re-rank.  Deterministic projections derived from a seed so results
@@ -21,6 +21,9 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..sources.tables import scale_out
+
+#: cosine_topk's bound on the driver-collected queries side
+MAX_QUERIES = 10_000
 
 
 def dot(a, b):
@@ -54,34 +57,28 @@ def cosine_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
-    impl: str = "vectorized",
 ) -> DataFrame:
     """Exact top-k cosine neighbors for each query vector.
 
-    queries must be small — they ride along with the job (broadcast in
-    'sql' mode, a collected matrix in 'vectorized' mode); the corpus is
-    scanned once with NO shuffle, then a per-query top-k window.
+    queries must be small — they are collected to the driver as a
+    matrix; the corpus is scanned once with NO shuffle, then a
+    per-query top-k window.
 
-    impl='vectorized' (default): the query matrix is L2-normalized on
-    the driver and closed over an Arrow-batched ``mapInPandas``; each
-    corpus batch scores against ALL queries as one BLAS matmul
-    (normalized C @ Q^T) — the same batched-kernel trade cuDF makes.
-    Verified bit-identical to 'sql' after the shared round-to-6.
-    impl='sql' keeps scoring in pure JVM expressions (interpreted HOF
-    folds; no Python workers required).
+    The query matrix is L2-normalized on the driver and closed over an
+    Arrow-batched ``mapInPandas``; each corpus batch scores against ALL
+    queries as one BLAS matmul (normalized C @ Q^T) — the same
+    batched-kernel trade cuDF makes.  Scores round to 6 places, so
+    near-equal scores tie and the tie breaks on neighbor id.
 
     The small-queries contract is ENFORCED (r4 VERDICT item 7): more
-    than ``max_queries`` (default 10_000, override via the
-    ``SPARK_GRAFT_COSINE_MAX_QUERIES`` env var) raises instead of
-    silently collecting an unbounded side to the driver — a mis-swapped
-    corpus/queries call fails loudly, not with a driver OOM.  The guard
-    is folded into the work each impl already does (ADVICE r5): the
-    vectorized path bounds its own collect with limit(max+1) — zero
-    extra Spark jobs, and laziness-preserving for the 'sql' path too
-    since broadcast collection is where the count materializes anyway."""
-    import os
+    than ``MAX_QUERIES`` rows raise instead of silently collecting an
+    unbounded side to the driver — a mis-swapped corpus/queries call
+    fails loudly, not with a driver OOM.  The guard is folded into the
+    collect itself (ADVICE r5): limit(max+1) bounds it — zero extra
+    Spark jobs."""
+    import numpy as np
+    import pandas as pd
 
-    max_queries = int(os.environ.get("SPARK_GRAFT_COSINE_MAX_QUERIES", "10000"))
     # null-robustness (round-9 null-injection leg): a NULL vector has
     # no geometry — such rows can neither be neighbors nor queries.
     # Declarative filters (pushed to the scan, free) instead of letting
@@ -89,106 +86,61 @@ def cosine_topk(
     corpus = corpus.filter(F.col(vec_col).isNotNull())
     queries = queries.filter(F.col(vec_col).isNotNull())
 
-    def _too_many() -> ValueError:
-        return ValueError(
-            f"cosine_topk: queries side has >{max_queries} rows; it is "
-            "collected/broadcast to every task, so it must be small. "
-            "Did you swap corpus and queries?  (Raise the cap via "
-            "SPARK_GRAFT_COSINE_MAX_QUERIES if this is intentional.)"
-        )
-
-    if impl == "vectorized":
-        import numpy as np
-        import pandas as pd
-
-        # limit(max+1) bounds the driver-side materialization: the
-        # (max+1)th row proves the contract violation without ever
-        # collecting an unbounded side
-        qrows = (
-            queries.select(query_id_col, vec_col)
-            .limit(max_queries + 1)
-            .collect()
-        )
-        if len(qrows) > max_queries:
-            raise _too_many()
-        if not qrows:
-            # zero non-null query vectors (what a 100%-null embedding
-            # column looks like): an empty query set has an empty
-            # neighbor list — return the typed empty result instead of
-            # letting np.linalg.norm crash on a 0-row matrix (r10 leg)
-            return corpus.sparkSession.createDataFrame(
-                [],
-                f"{query_id_col} long, neighbor_id long, "
-                "cosine double, rank long",
-            )
-        qm = np.array([list(r[1]) for r in qrows], dtype=np.float64)
-        qids = np.array([int(r[0]) for r in qrows], dtype=np.int64)
-        qn = qm / np.linalg.norm(qm, axis=1, keepdims=True)
-
-        def score(batches):
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                c = np.array([list(v) for v in pdf[vec_col]], dtype=np.float64)
-                cn = c / np.linalg.norm(c, axis=1, keepdims=True)
-                s = cn @ qn.T
-                yield pd.DataFrame(
-                    {
-                        "neighbor_id": np.repeat(
-                            pdf[id_col].values.astype("int64"), len(qids)
-                        ),
-                        "__qid": np.tile(qids, len(pdf)),
-                        "cosine": np.round(s.ravel(), 6),
-                    }
-                )
-
-        # pass ONLY the two columns the kernel touches (guide §4.1):
-        # mapInPandas is opaque to column pruning, so without the
-        # explicit select every corpus column (labels, metadata) would
-        # cross the scale_out exchange AND the Arrow boundary
-        scored = scale_out(corpus.select(id_col, vec_col)).mapInPandas(
-            score, "neighbor_id long, __qid long, cosine double"
-        ).filter(F.col("neighbor_id") != F.col("__qid"))
-        w = Window.partitionBy("__qid").orderBy(
-            F.desc("cosine"), F.asc("neighbor_id")
-        )
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select(
-                F.col("__qid").alias(query_id_col),
-                "neighbor_id",
-                "cosine",
-                F.col("rank").cast("long").alias("rank"),
-            )
-        )
-    # sql impl: the queries side broadcasts JVM-side with no driver
-    # collect to piggyback the guard on, so probe with a bounded count
-    # (touches at most max+1 rows — never a full scan)
-    if queries.limit(max_queries + 1).count() > max_queries:
-        raise _too_many()
-    # norms are per-row, not per-pair: precompute each side once so the
-    # O(Q x N) pair stage does a single interpreted fold (the dot), not
-    # three.  scale_out: scoring is compute-bound -> use every core.
-    q = queries.select(
-        F.col(query_id_col).alias("__qid"),
-        F.col(vec_col).alias("__qvec"),
-        l2_norm(F.col(vec_col)).alias("__qnorm"),
+    # limit(max+1) bounds the driver-side materialization: the
+    # (max+1)th row proves the contract violation without ever
+    # collecting an unbounded side
+    qrows = (
+        queries.select(query_id_col, vec_col)
+        .limit(MAX_QUERIES + 1)
+        .collect()
     )
-    scored = scale_out(corpus).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("__cvec"),
-        l2_norm(F.col(vec_col)).alias("__cnorm"),
-    ).join(F.broadcast(q), F.col("neighbor_id") != F.col("__qid"))
-    scored = scored.withColumn(
-        "cosine",
-        F.round(
-            dot(F.col("__qvec"), F.col("__cvec"))
-            / (F.col("__qnorm") * F.col("__cnorm")),
-            6,
-        ),
+    if len(qrows) > MAX_QUERIES:
+        raise ValueError(
+            f"cosine_topk: queries side has >{MAX_QUERIES} rows; it is "
+            "collected to the driver, so it must be small. "
+            "Did you swap corpus and queries?"
+        )
+    if not qrows:
+        # zero non-null query vectors (what a 100%-null embedding
+        # column looks like): an empty query set has an empty
+        # neighbor list — return the typed empty result instead of
+        # letting np.linalg.norm crash on a 0-row matrix (r10 leg)
+        return corpus.sparkSession.createDataFrame(
+            [],
+            f"{query_id_col} long, neighbor_id long, "
+            "cosine double, rank long",
+        )
+    qm = np.array([list(r[1]) for r in qrows], dtype=np.float64)
+    qids = np.array([int(r[0]) for r in qrows], dtype=np.int64)
+    qn = qm / np.linalg.norm(qm, axis=1, keepdims=True)
+
+    def score(batches):
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            c = np.array([list(v) for v in pdf[vec_col]], dtype=np.float64)
+            cn = c / np.linalg.norm(c, axis=1, keepdims=True)
+            s = cn @ qn.T
+            yield pd.DataFrame(
+                {
+                    "neighbor_id": np.repeat(
+                        pdf[id_col].values.astype("int64"), len(qids)
+                    ),
+                    "__qid": np.tile(qids, len(pdf)),
+                    "cosine": np.round(s.ravel(), 6),
+                }
+            )
+
+    # pass ONLY the two columns the kernel touches (guide §4.1):
+    # mapInPandas is opaque to column pruning, so without the explicit
+    # select every corpus column (labels, metadata) would cross the
+    # scale_out exchange AND the Arrow boundary
+    scored = scale_out(corpus.select(id_col, vec_col)).mapInPandas(
+        score, "neighbor_id long, __qid long, cosine double"
+    ).filter(F.col("neighbor_id") != F.col("__qid"))
+    w = Window.partitionBy("__qid").orderBy(
+        F.desc("cosine"), F.asc("neighbor_id")
     )
-    w = Window.partitionBy("__qid").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)

@@ -76,9 +76,9 @@ def _geom(em: DataFrame) -> DataFrame:
 )
 def q_cosine_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force top-5 cosine neighbors for 10 query vectors
-    (operators/similarity.cosine_topk): broadcast queries, single corpus
-    scan, per-query top-k window.  zip_with/aggregate dot product is
-    pure JVM SQL — no Python in the loop."""
+    (operators/similarity.cosine_topk): driver-collected queries, single
+    corpus scan scored by one Arrow-batched matmul per batch, per-query
+    top-k window."""
     from ..operators.similarity import cosine_topk
 
     em = _geom(load_table(spark, sf_dir, "embeddings"))

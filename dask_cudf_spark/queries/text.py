@@ -576,10 +576,10 @@ def q_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     token sets: this corpus draws from a tiny shared vocabulary, so
     token-set jaccard saturates near 1 between ARBITRARY long docs
     (measured: 12k+ "pairs" at 0.8) while char-shingle jaccard stays
-    discriminative.  This is the verification twin of q_minhash_dedup
-    (xxhash + capped in-bucket pair generation — the throughput path);
-    same one-shuffle LSH topology, so a hash-match here certifies the
-    pipeline's banding/scoring logic, not just its components.
+    discriminative.  q_minhash_dedup runs the same minhash_sig_pairs
+    candidates and then clusters them, so a hash-match here certifies
+    the fuzzy-dedup pipeline's banding/scoring logic on its own, not
+    just its end result.
 
     r3: rebuilt on operators/dedup.minhash_sig_pairs — Arrow-vectorized
     md5-exact signatures (minhash_signature_md5_np) + in-bucket pair

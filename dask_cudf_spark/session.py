@@ -56,6 +56,11 @@ def get_spark(
     ``shuffle_partitions`` defaults to the local core count: right for
     local[] testing; on a cluster pass a value sized to the data
     (or rely on AQE coalescing from a high initial value).
+
+    ``extra_conf`` overrides any default.  The shuffle codec stays
+    Spark's lz4: zstd measured within noise at local volumes
+    (bench_local_r16/ab_zstd.txt); on a network-bound cluster pass
+    ``{"spark.io.compression.codec": "zstd"}``.
     """
     # before the JVM launches: make google.protobuf importable for the
     # transformWithState streaming runner if only a vendored copy
@@ -68,16 +73,6 @@ def get_spark(
         master or f"local[{cpus}]"
     )
     conf = dict(_DEFAULTS)
-    # Shuffle codec is scale-dependent, so it is an env knob rather
-    # than a hard default (r16, guide §2.3): at local bench volumes
-    # (<= ~100 MB shuffles) lz4 vs zstd measured within noise
-    # (bench_local_r16/ab_zstd.txt: mins 3.27 vs 3.19 s at a 6M-row
-    # change_feed, host-steal bound), so the Spark default stays; on a
-    # network-bound cluster where shuffle bytes dominate, set
-    # SPARK_GRAFT_IO_CODEC=zstd for the better ratio at a little CPU.
-    codec = os.environ.get("SPARK_GRAFT_IO_CODEC")
-    if codec:
-        conf["spark.io.compression.codec"] = codec
     conf["spark.sql.shuffle.partitions"] = str(
         shuffle_partitions if shuffle_partitions is not None else int(cpus)
     )

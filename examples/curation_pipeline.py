@@ -36,32 +36,26 @@ sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 from pyspark.sql import functions as F  # noqa: E402
 
 
-def run_pipeline(
-    spark, sf_dir: str, out_dir: str, funnel_counts: bool = True
-) -> dict:
+def build_curated(spark, sf_dir: str):
+    """Stages 1-6 of the funnel as lazy Spark DataFrames.
+
+    Returns ``(frame, stages)``: ``frame`` is the pre-publish frame
+    (stage 6's output, what step 7 commits) and ``stages`` maps each
+    funnel name to the frame it counts.  ``run_pipeline`` counts and
+    publishes them; ``scripts/pipeline_bench.py`` audits the composed
+    plan of ``frame``.
+    """
     from dask_cudf_spark.frame import read_parquet
     from dask_cudf_spark.operators.dedup import (
         exact_dedup,
-        near_dedup_minhash,
+        near_dedup_minhash_sig,
     )
-    from dask_cudf_spark.sources import txlog
 
-    funnel: dict[str, int] = {}
-
-    def stage(name: str, df_like) -> None:
-        # Each intermediate count is a SEPARATE action that re-executes
-        # every stage above it (no cache in the lineage) — priceless
-        # while debugging a funnel, O(stages x scans) at 100 TB.  The
-        # production/bench path (funnel_counts=False) skips these: the
-        # pipeline then runs as ONE composed job whose only actions are
-        # the publish write and a single final-stats aggregation
-        # (scripts/pipeline_bench.py asserts the scan count).
-        if funnel_counts:
-            funnel[name] = df_like.count()
+    stages = {}
 
     # 1. ingest ----------------------------------------------------------
     docs = read_parquet(spark, f"{sf_dir}/documents.parquet")
-    stage("ingested", docs)
+    stages["ingested"] = docs.spark
 
     # 2. quality filter (Frame/Col layer: pandas-style expressions) ------
     docs = docs.assign(
@@ -76,18 +70,26 @@ def run_pipeline(
         & (docs.alpha_ratio > 0.4)
         & docs.lang.isin(["en", "de", "fr"])
     ]
-    stage("after_quality", kept)
+    stages["after_quality"] = kept.spark
 
     # 3. exact dedup (content-fingerprint, keep lowest doc_id) -----------
     sdf = exact_dedup(kept.spark, text_col="text", id_col="doc_id")
-    stage("after_exact_dedup", sdf)
+    stages["after_exact_dedup"] = sdf
 
-    # 4. fuzzy dedup: banded MinHash-LSH -> exact-Jaccard verify ->
-    #    single-link connected components; survivors = cluster min id --
-    sdf = near_dedup_minhash(
-        sdf, text_col="text", id_col="doc_id", threshold=0.8, clusters=True
+    # 4. fuzzy dedup: banded MinHash-LSH over md5 char-5-gram signatures
+    #    -> signature-agreement verify (>= 80% of 16 hashes) -> single-
+    #    link connected components; survivors = cluster min id.  Same
+    #    constants as q_minhash_dedup, whose DuckDB oracle replays it --
+    sdf = near_dedup_minhash_sig(
+        sdf,
+        text_col="text",
+        id_col="doc_id",
+        threshold=0.8,
+        num_hashes=16,
+        bands=4,
+        shingle=5,
     )
-    stage("after_fuzzy_dedup", sdf)
+    stages["after_fuzzy_dedup"] = sdf
 
     # 5. decontamination: drop anything sharing a fingerprint with the
     #    benchmark set (here: a deterministic 2% sample standing in for
@@ -108,7 +110,7 @@ def run_pipeline(
         )
         .drop("fp")
     )
-    stage("after_decontamination", sdf)
+    stages["after_decontamination"] = sdf
 
     # 6. deterministic split: md5 bucket on content, not random() —
     #    replays identically at any parallelism
@@ -119,6 +121,27 @@ def run_pipeline(
                    .cast("long"), F.lit(100)) < 95,
             F.lit("train"),
         ).otherwise(F.lit("valid")),
+    )
+    return sdf, stages
+
+
+def run_pipeline(
+    spark, sf_dir: str, out_dir: str, funnel_counts: bool = True
+) -> dict:
+    from dask_cudf_spark.sources import txlog
+
+    sdf, stages = build_curated(spark, sf_dir)
+    # Each intermediate count is a SEPARATE action that re-executes
+    # every stage above it (no cache in the lineage) — priceless while
+    # debugging a funnel, O(stages x scans) at 100 TB.  The
+    # production/bench path (funnel_counts=False) skips these: the
+    # pipeline then runs as ONE composed job whose only actions are the
+    # publish write and a single final-stats aggregation
+    # (scripts/pipeline_bench.py audits the scan count).
+    funnel: dict[str, int] = (
+        {name: df.count() for name, df in stages.items()}
+        if funnel_counts
+        else {}
     )
 
     # 7. ACID publish: txlog commit with min/max stats on n_tokens so

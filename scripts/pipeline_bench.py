@@ -31,13 +31,14 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/examples")
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _REPO)
+sys.path.insert(0, os.path.join(_REPO, "examples"))
 
 from pyspark.sql import functions as F  # noqa: E402
 
 from dask_cudf_spark.session import get_spark  # noqa: E402
-from curation_pipeline import run_pipeline  # noqa: E402
+from curation_pipeline import build_curated, run_pipeline  # noqa: E402
 
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 REPEAT = int(sys.argv[2]) if len(sys.argv) > 2 else 2
@@ -89,45 +90,12 @@ assert funnel_x10["published"] == funnel_x1["published"], (
 )
 
 # ---- plan audit of the COMPOSED dataflow -----------------------------
-# Rebuild the pipeline's final frame (pre-publish) and audit one plan:
-# scan count of documents.parquet must be the constant the dataflow
-# needs, not stages x scans.
-from dask_cudf_spark.frame import read_parquet  # noqa: E402
-from dask_cudf_spark.operators.dedup import (  # noqa: E402
-    exact_dedup,
-    near_dedup_minhash,
-)
+# The example's own pre-publish frame, one plan: the scan count of
+# documents.parquet must be the constant the dataflow needs, not
+# stages x scans.
 from dask_cudf_spark.plans.audit import audit  # noqa: E402
 
-docs_f = read_parquet(spark, f"{SF}/documents.parquet")
-docs_f = docs_f.assign(
-    n_tokens=docs_f.text.str.split().list.len(),
-    alpha_ratio=(
-        docs_f.text.str.count(r"[A-Za-z]").astype("double")
-        / docs_f.text.str.len().clip(lower=1)
-    ),
-)
-kept = docs_f[
-    (docs_f.n_tokens >= 5)
-    & (docs_f.alpha_ratio > 0.4)
-    & docs_f.lang.isin(["en", "de", "fr"])
-]
-sdf = exact_dedup(kept.spark, text_col="text", id_col="doc_id")
-sdf = near_dedup_minhash(
-    sdf, text_col="text", id_col="doc_id", threshold=0.8, clusters=True
-)
-bench = (
-    spark.read.parquet(f"{SF}/documents.parquet")
-    .filter(F.pmod(F.crc32(F.col("text")), F.lit(50)) == 0)
-    .select(F.md5(F.col("text")).alias("bench_fp"))
-    .distinct()
-)
-sdf = (
-    sdf.withColumn("fp", F.md5(F.col("text")))
-    .join(F.broadcast(bench), F.col("fp") == F.col("bench_fp"), "left_anti")
-    .drop("fp")
-)
-a = audit(sdf)
+a = audit(build_curated(spark, SF)[0])
 n_scans = sum(
     "documents.parquet" in meta.get("Location", "") for _, _, _, meta in a.nodes
 )

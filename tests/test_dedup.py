@@ -172,7 +172,7 @@ def test_oversize_bucket_error_policy_raises(spark):
 
 
 def test_within_cap_policies_identical(spark):
-    """Below the cap all three policies are the same all-pairs plan."""
+    """Below the cap both policies are the same all-pairs plan."""
     df = spark.createDataFrame(
         [
             (1, "alpha beta gamma delta epsilon zeta"),
@@ -188,27 +188,15 @@ def test_within_cap_policies_identical(spark):
                 df, cap_bucket=100, on_oversize=p
             ).collect()
         )
-        for p in ("star", "error", "truncate")
+        for p in ("star", "error")
     ]
-    assert outs[0] == outs[1] == outs[2]
+    assert outs[0] == outs[1]
     assert outs[0] and all(a == 1 and b == 2 for a, b, _ in outs[0])
 
 
 def test_invalid_oversize_policy_rejected(spark):
     with pytest.raises(ValueError, match="on_oversize"):
         minhash_sig_pairs(_boilerplate_df(spark, 2), on_oversize="drop")
-
-
-def test_truncate_mode_degenerate_cap(spark):
-    """Round-4 review: cap_bucket<=1 in truncate mode used to build a
-    DESCENDING index sequence (self-pairs + element_at(_, 0) crash);
-    it must yield zero pairs like the old slice path."""
-    df = _boilerplate_df(spark, n=5)
-    got = minhash_sig_pairs(df, cap_bucket=1, on_oversize="truncate").collect()
-    assert got == []
-    # cap=2 keeps exactly the first two ids per bucket
-    got2 = minhash_sig_pairs(df, cap_bucket=2, on_oversize="truncate").collect()
-    assert {(r["id_a"], r["id_b"]) for r in got2} == {(0, 1)}
 
 
 def test_neardup_blocked_banding_lossless_and_bounded(spark):

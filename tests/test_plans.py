@@ -108,14 +108,9 @@ def test_cosine_corpus_not_shuffled(spark):
     q = em.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    # sql impl: query side broadcast via NLJ; corpus never exchanges
-    # before the join
-    sql_plan = audit(cosine_topk(em, q, impl="sql")).text
-    assert "BroadcastNestedLoopJoin" in sql_plan
-    assert "Exchange hashpartitioning" not in sql_plan.split("Join")[0]
-    # vectorized impl (the default): no join at all — corpus streams
-    # through one MapInPandas; the only hash exchange is the top-k window
-    a = audit(cosine_topk(em, q, impl="vectorized"))
+    # no join at all — the corpus streams through one MapInPandas; the
+    # only hash exchange is the top-k window
+    a = audit(cosine_topk(em, q))
     assert a.python_nodes == ["MapInPandas"]
     assert "Join" not in a.text
     assert a.n_shuffles <= 2  # scale_out round-robin + window partitionBy

@@ -50,30 +50,53 @@ def test_scaled_sum_partition_invariance(xs, k):
 # ------------------------------------------------------- minhash (numpy)
 
 
-def _np_minhash(text: str, num_hashes: int = 16, shingle: int = 5):
-    """Reimplementation of functions/text.minhash_signature_np's kernel
-    (kept in sync by the equality test below running against Spark in
-    test_oracle's rows-only gate)."""
-    import numpy as np
+def _md5_minhash(text: str, num_hashes: int = 16, shingle: int = 5):
+    """Pure-python mirror of functions/text.minhash_signature_md5_np's
+    kernel: distinct character shingles -> 60-bit md5 prefix mod
+    2^31-1 -> k affine permutation minima (kept in sync by
+    test_minhash_mirror_matches_spark_udf)."""
+    import hashlib
 
     from dask_cudf_spark.functions.text import (
         _MERSENNE_P,
         _minhash_perm_constants,
     )
 
-    consts = _minhash_perm_constants(num_hashes)
-    A = np.array([a for a, _ in consts], dtype=np.int64)
-    B = np.array([b for _, b in consts], dtype=np.int64)
-    b = np.frombuffer(text.encode("utf-8"), dtype=np.uint8).astype(np.int64)
-    n = b.size - (shingle - 1)
+    n = len(text) - (shingle - 1)
     if n <= 0:
         return [_MERSENNE_P] * num_hashes
-    pows = np.array([31**j for j in range(shingle)][::-1], dtype=np.int64)
-    sh = np.zeros(n, dtype=np.int64)
-    for j in range(shingle):
-        sh += b[j : j + n] * pows[j]
-    sh = np.unique(sh) % _MERSENNE_P
-    return ((sh[:, None] * A[None, :] + B[None, :]) % _MERSENNE_P).min(axis=0).tolist()
+    hv = {
+        int(hashlib.md5(text[i : i + shingle].encode("utf-8")).hexdigest()[:15], 16)
+        % _MERSENNE_P
+        for i in range(n)
+    }
+    return [
+        min((h * a + b) % _MERSENNE_P for h in hv)
+        for a, b in _minhash_perm_constants(num_hashes)
+    ]
+
+
+def test_minhash_mirror_matches_spark_udf(spark):
+    """The mirror above equals the Arrow UDF the dedup operator runs,
+    including short, empty and non-ASCII texts."""
+    from dask_cudf_spark.functions.text import minhash_signature_md5_np
+
+    texts = [
+        "the quick brown fox jumps over the lazy dog",
+        "the quick brown fox jumps over the lazy cat",
+        "abcd",
+        "",
+        "naïve café — ünïcode 😀 text",
+        "aaaaaaaaaaaaaaaa",
+    ]
+    df = spark.createDataFrame(list(enumerate(texts)), "i long, text string")
+    got = {
+        r["i"]: list(r["sig"])
+        for r in df.select(
+            "i", minhash_signature_md5_np("text").alias("sig")
+        ).collect()
+    }
+    assert got == {i: _md5_minhash(t) for i, t in enumerate(texts)}
 
 
 words = st.lists(
@@ -84,7 +107,7 @@ words = st.lists(
 @given(words)
 @settings(max_examples=200)
 def test_minhash_identical_docs_identical_signatures(t):
-    assert _np_minhash(t) == _np_minhash(t)
+    assert _md5_minhash(t) == _md5_minhash(t)
 
 
 @given(words, words)
@@ -96,12 +119,11 @@ def test_minhash_signature_agreement_bounded_by_shingles(a, b):
     import numpy as np
 
     def shingles(t):
-        bt = t.encode("utf-8")
-        return {bt[i : i + 5] for i in range(max(0, len(bt) - 4))}
+        return {t[i : i + 5] for i in range(max(0, len(t) - 4))}
 
     sa, sb = shingles(a), shingles(b)
     if sa == sb:
-        assert _np_minhash(a) == _np_minhash(b)
+        assert _md5_minhash(a) == _md5_minhash(b)
 
 
 @given(st.lists(st.text(alphabet="abc d", min_size=5, max_size=40), min_size=2, max_size=2))
@@ -112,7 +134,7 @@ def test_simhash_range(pair):
     import numpy as np
 
     for t in pair:
-        sig = _np_minhash(t)
+        sig = _md5_minhash(t)
         assert all(0 <= v < (1 << 31) for v in sig)
 
 

@@ -256,10 +256,11 @@ def test_cosine_topk_rejects_oversized_query_side(spark, monkeypatch):
     so misuse (swapped corpus/queries) must raise, not OOM."""
     import pytest
 
+    from dask_cudf_spark.operators import similarity
     from dask_cudf_spark.operators.similarity import cosine_topk
 
     em = load_table(spark, SF_DIR, "embeddings").select("vec_id", "embedding")
-    monkeypatch.setenv("SPARK_GRAFT_COSINE_MAX_QUERIES", "10")
+    monkeypatch.setattr(similarity, "MAX_QUERIES", 10)
     big_queries = em.select(F.col("vec_id").alias("query_id"), "embedding")
     with pytest.raises(ValueError, match="must be small"):
         cosine_topk(em, big_queries, k=3)
