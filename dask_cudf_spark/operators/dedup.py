@@ -222,13 +222,6 @@ def near_dedup_minhash_sig(
     return df.join(to_drop, on=id_col, how="left_anti")
 
 
-#: one-slot retirement registry for connected_components' caches (the
-#: component cache, plus the edge cache on the distributed fallback):
-#: each call unpersists the PREVIOUS call's frames so a long session
-#: holds at most one call's worth of cache
-_last_cc_caches: list[DataFrame] = []
-
-
 def connected_components(
     edges: DataFrame,
     nodes: DataFrame | None = None,
@@ -263,12 +256,15 @@ def connected_components(
       threshold while streaming (it stops and emits a null sentinel row
       if the edge count exceeds the cap), so the common small-graph
       case runs ONE job that computes the pipeline, the components, and
-      the size check together; the cached component table (persisted
-      here, materialized by the sentinel probe count) is what the
-      caller's action reuses.  The edge pipeline feeds the single task
-      through repartition(1) — a real exchange — so the upstream
-      banding/verify stages keep their full parallelism (a coalesce(1)
-      on the uncached pipeline would drag them into the one task).
+      the size check together.  The component table is a local
+      checkpoint owned by the returned frame: the sentinel probe count
+      fills it, the caller's actions read it, and Spark's ContextCleaner
+      frees its blocks when the frame is garbage-collected — no call
+      retires another call's result.  The edge pipeline feeds the
+      single task through repartition(1) — a real exchange — so the
+      upstream banding/verify stages keep their full parallelism (a
+      coalesce(1) on the uncached pipeline would drag them into the one
+      task).
       Oversized graphs (sentinel seen) fall back to the distributed
       loop below, paying one aborted attempt — acceptable because the
       attempt task stops reading at the cap, and loose-threshold
@@ -306,59 +302,36 @@ def connected_components(
         F.col(src).alias("n"), F.col(dst).cast(node_type).alias("m")
     ).dropna()
 
-    # round-4 leak fix, generalized: unpersist the PREVIOUS call's
-    # caches so a long session holds one call's worth, never one per
-    # call.  Retire BEFORE persisting this call's frames: CacheManager
-    # short-circuits a persist whose canonicalized plan is already
-    # cached ("already cached data"), so persisting first and retiring
-    # second would no-op the new registration and then destroy the
-    # shared entry — every subsequent action silently recomputes the
-    # full pipeline (measured: q_minhash_dedup's post-components action
-    # 0.44 s cached vs 1.1-1.3 s after exactly this misordering).
-    # persist, not localCheckpoint (measured 2x faster end-to-end:
-    # InMemoryRelation keeps Catalyst optimizations a LogicalRDD scan
-    # loses) and not a GC finalizer (the result frame's Python object
-    # dies before the caller's action runs, unpersisting too early —
-    # measured).
-    global _last_cc_caches
-    for p in _last_cc_caches:
-        try:
-            # correctness-neutral: an unpersisted frame recomputes
-            p.unpersist(False)
-        except Exception:
-            pass  # context already stopped
-    _last_cc_caches = []
-
-    # the edge cache is persisted UP FRONT so the guarded attempt job
+    # the edge cache lives for this call only: the guarded attempt job
     # fills it as a side effect (e is upstream of the union-find's
-    # exchange): if the attempt overflows, the distributed fallback
-    # reuses the cached edges instead of recomputing the whole LSH
+    # exchange), so if the attempt overflows the distributed fallback
+    # reads the cached edges instead of recomputing the whole LSH
     # pipeline — the oversize case costs one aborted (cap-bounded)
-    # union-find task, never a second pipeline pass.  In the common
-    # small-graph case the cache is a few thousand rows — noise.
+    # union-find task, never a second pipeline pass.  Both paths end
+    # in a checkpoint that no longer reads e, so the cache is released
+    # before returning.
     e = e.persist()
-    _last_cc_caches.append(e)
-    comp = None
-    if local_threshold > 0:
-        # optimistic guarded local attempt (one job): union-find with
-        # the threshold enforced inside the task; a null sentinel row
-        # means the cap was exceeded and the distributed loop must run
-        cand = _cc_local_unionfind(
-            e, node_type, cap=local_threshold
-        ).persist()
-        _last_cc_caches.append(cand)
-        # this count materializes the cache (pipeline + union-find +
-        # size check in the SAME job) and probes for the sentinel
-        if cand.filter(F.col("node").isNull()).count() == 0:
-            comp = cand
-        else:
-            cand.unpersist(False)
-            _last_cc_caches.remove(cand)
-    if comp is None:
-        und = e.union(
-            e.select(F.col("m").alias("n"), F.col("n").alias("m"))
-        ).localCheckpoint(eager=True)
-        comp = _cc_label_propagation(und, max_iter)
+    try:
+        comp = None
+        if local_threshold > 0:
+            # optimistic guarded local attempt (one job): union-find
+            # with the threshold enforced inside the task; a null
+            # sentinel row means the cap was exceeded and the
+            # distributed loop must run.  The probe count materializes
+            # the checkpoint (pipeline + union-find + size check in the
+            # SAME job); its blocks live as long as the returned frame.
+            cand = _cc_local_unionfind(
+                e, node_type, cap=local_threshold
+            ).localCheckpoint(eager=False)
+            if cand.filter(F.col("node").isNull()).count() == 0:
+                comp = cand
+        if comp is None:
+            und = e.union(
+                e.select(F.col("m").alias("n"), F.col("n").alias("m"))
+            ).localCheckpoint(eager=True)
+            comp = _cc_label_propagation(und, max_iter)
+    finally:
+        e.unpersist(False)
     if nodes is not None:
         iso = (
             nodes.select(F.col(nodes.columns[0]).alias("node"))
@@ -461,6 +434,12 @@ def _cc_label_propagation(und: DataFrame, max_iter: int) -> DataFrame:
         labels = updated.drop("__changed")
         if n_changed == 0:
             break
+    else:
+        # unconverged labels are wrong components: fail loudly
+        raise RuntimeError(
+            f"connected_components: label propagation did not converge "
+            f"within max_iter={max_iter} iterations; raise max_iter"
+        )
     return labels.select(F.col("n").alias("node"), "component")
 
 

@@ -31,7 +31,14 @@ from .txlog import optimize as txlog_optimize
 from .txlog import vacuum as txlog_vacuum
 from .txlog import read_snapshot as txlog_read_snapshot
 from .txlog import table_history as txlog_history
-from .writers import to_csv, to_json, to_orc, to_parquet, to_parquet_zordered
+from .writers import (
+    to_csv,
+    to_json,
+    to_orc,
+    to_parquet,
+    to_parquet_zordered,
+    upsert_partitions,
+)
 
 __all__ = [
     "read_parquet",

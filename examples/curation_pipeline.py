@@ -37,7 +37,12 @@ from pyspark.sql import functions as F  # noqa: E402
 
 
 def build_curated(spark, sf_dir: str):
-    """Stages 1-6 of the funnel as lazy Spark DataFrames.
+    """Stages 1-6 of the funnel as Spark DataFrames.
+
+    Building is not free: stage 4's connected components runs one Spark
+    job (LSH + union-find) and checkpoints its component table, so the
+    frames read the components instead of recomputing them.  Every
+    other stage is lazy.
 
     Returns ``(frame, stages)``: ``frame`` is the pre-publish frame
     (stage 6's output, what step 7 commits) and ``stages`` maps each
@@ -132,11 +137,11 @@ def run_pipeline(
 
     sdf, stages = build_curated(spark, sf_dir)
     # Each intermediate count is a SEPARATE action that re-executes
-    # every stage above it (no cache in the lineage) — priceless while
-    # debugging a funnel, O(stages x scans) at 100 TB.  The
-    # production/bench path (funnel_counts=False) skips these: the
-    # pipeline then runs as ONE composed job whose only actions are the
-    # publish write and a single final-stats aggregation
+    # every stage above it back to the components checkpoint —
+    # priceless while debugging a funnel, O(stages x scans) at 100 TB.
+    # The production/bench path (funnel_counts=False) skips these: its
+    # only actions after the build's components job are the publish
+    # write and a single final-stats aggregation
     # (scripts/pipeline_bench.py audits the scan count).
     funnel: dict[str, int] = (
         {name: df.count() for name, df in stages.items()}

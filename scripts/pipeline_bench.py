@@ -14,9 +14,14 @@ and audits the composed publish plan:
   - wall-clock x1 vs x10 (should scale sublinearly — fixed JVM/job
     overhead amortizes; superlinear = a quadratic stage snuck in);
   - documents.parquet SCAN COUNT in the one composed plan == the small
-    constant the dataflow needs (main flow + LSH signature build +
-    decontam benchmark sample), NOT stages x scans;
+    constant the dataflow needs (main flow + decontam benchmark
+    sample), NOT stages x scans.  The LSH signature branch sits behind
+    the connected-components checkpoint, so its scan is no longer in
+    the composed plan;
   - shuffle count of the composition (exchanges in the final plan).
+
+The audit rebuilds the frame with build_curated, which re-runs stage
+4's components job (LSH + union-find) once more.
 
 Usage:  python scripts/pipeline_bench.py [sf_dir] [repeat]
 Prints one JSON line for BASELINE.md.

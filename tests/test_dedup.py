@@ -134,6 +134,66 @@ def test_cc_isolated_nodes_param(spark):
     assert got == {0: 0, 1: 1, 2: 1, 3: 3, 4: 4}
 
 
+def test_cc_label_propagation_unconverged_raises(spark):
+    """A chain longer than max_iter hops cannot converge: the
+    distributed path must fail loudly, not return partial labels."""
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(59)], "id_a long, id_b long"
+    )
+    with pytest.raises(RuntimeError, match="max_iter=5"):
+        connected_components(edges, local_threshold=0, max_iter=5)
+
+
+def _jobs(spark, group, action):
+    """(result, number of Spark jobs) of running ``action`` under its
+    own job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _dup_docs(spark, offset, n=40):
+    """n docs in identical-text triples sharing no shingle across
+    triples; ids and words offset so two corpora never share a plan."""
+    rows = [
+        (offset + i, " ".join(f"w{offset + i // 3}x{j}" for j in range(8)))
+        for i in range(n)
+    ]
+    return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+def test_cc_result_outlives_later_calls(spark):
+    """Building a second dedup frame must not retire the first frame's
+    components: counting frame A costs the same jobs, with the same
+    result, before and after frame B is built."""
+    a = near_dedup_minhash_sig(_dup_docs(spark, 0))
+    n_before, jobs_before = _jobs(spark, "cc-a-before", a.count)
+    b = near_dedup_minhash_sig(_dup_docs(spark, 1000))
+    n_after, jobs_after = _jobs(spark, "cc-a-after", a.count)
+    assert n_before == n_after == 14  # 13 triples + 1 lone doc
+    assert jobs_after == jobs_before
+    assert b.count() == 14
+
+
+def test_cc_leaves_no_cache_entries(spark):
+    """Whatever connected_components persists lives for the call only:
+    afterwards the session's CacheManager holds nothing it added, on
+    the union-find path and on the overflow fallback."""
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(9)], "id_a long, id_b long"
+    )
+    for threshold in (2_000_000, 3):
+        comp = connected_components(edges, local_threshold=threshold)
+        assert cache.isEmpty(), f"cache entries left (threshold={threshold})"
+        assert _comp_map(comp) == {i: 0 for i in range(10)}
+
+
 # ------------------------------------------------- cap_bucket policies
 
 

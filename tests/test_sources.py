@@ -1601,3 +1601,23 @@ def test_txlog_heal_log_gaps(spark, tmp_path):
     ) == [0, 1, 2]
     # idempotent: nothing left to heal
     assert txlog.heal_log_gaps(spark, path, min_age_seconds=0) == []
+
+
+@pytest.mark.parametrize(
+    "module",
+    [
+        "dask_cudf_spark",
+        "dask_cudf_spark.sources",
+        "dask_cudf_spark.operators",
+        "dask_cudf_spark.functions",
+        "dask_cudf_spark.streaming",
+    ],
+)
+def test_public_all_names_resolve(module):
+    """Every name a package exports in ``__all__`` resolves, so
+    ``from <package> import *`` cannot raise AttributeError."""
+    import importlib
+
+    mod = importlib.import_module(module)
+    missing = [n for n in mod.__all__ if not hasattr(mod, n)]
+    assert not missing, f"{module}.__all__ names unimported: {missing}"
